@@ -15,6 +15,8 @@ and lowercases each token after; lowering first could change letter-ness
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -32,6 +34,36 @@ def tokens_array(text: Column | str) -> Column:
     toks = F.split(col, TOKEN_SPLIT_REGEX)
     toks = F.transform(toks, F.lower)
     return F.filter(toks, lambda t: t != F.lit(""))
+
+
+def token_ngrams(
+    text: Column | str, n: int, gram: Callable[[Column], Column]
+) -> Column:
+    """``gram(window)`` for every n-token window of :func:`tokens_array`,
+    in document order, duplicates kept; empty for null or empty text and
+    for documents with fewer than ``n`` tokens.
+
+    The token array is bound ONCE per row by a one-element ``transform``
+    (a let-binding).  Catalyst does no common-subexpression elimination
+    inside higher-order-function lambdas, so naming the tokenizer in the
+    window lambda would re-split the document per window — quadratic in
+    tokens.  This is the one place that rule lives for n-gram builders."""
+    return F.element_at(
+        F.transform(
+            F.array(tokens_array(text)),
+            lambda t: F.when(
+                # sequence(1, stop < 1) counts DOWN: guard short documents
+                F.size(t) >= n,
+                F.transform(
+                    F.sequence(F.lit(1), F.size(t) - (n - 1)),
+                    lambda i: gram(F.slice(t, i, n)),
+                ),
+                # empty with nullable elements: typed as each builder's
+                # former CAST(array() AS ARRAY<T>) branch
+            ).otherwise(F.slice(F.array(F.lit(None)), 1, 0)),
+        ),
+        1,
+    )
 
 
 def tokenize_column(text: Column | str) -> Column:

@@ -31,7 +31,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from p2_mapreduce_spark.functions.text import tokens_array
+from p2_mapreduce_spark.functions.text import token_ngrams, tokens_array
 from p2_mapreduce_spark.session import spread
 
 
@@ -143,16 +143,9 @@ def _string_shingles(
     equality against a broadcast set is already shuffle-free, so the only
     cost is comparison width.
     """
-    toks = tokens_array(F.col(text_col))
-    sh = F.when(
-        F.size(toks) >= n,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-                lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-            )
-        ),
-    ).otherwise(F.expr("CAST(array() AS ARRAY<STRING>)"))
+    sh = F.array_distinct(
+        token_ngrams(text_col, n, lambda g: F.concat_ws(" ", g))
+    )
     return spread(docs).select(
         F.col(id_col), F.explode(sh).alias("shingle")
     )

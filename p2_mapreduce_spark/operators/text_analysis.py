@@ -18,7 +18,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from p2_mapreduce_spark.functions.numeric import dsum
-from p2_mapreduce_spark.functions.text import TOKEN_SPLIT_REGEX, tokens_array
+from p2_mapreduce_spark.functions.text import (
+    TOKEN_SPLIT_REGEX,
+    token_ngrams,
+    tokens_array,
+)
 from p2_mapreduce_spark.session import spread
 
 #: (language, marker regex) — tiny n-gram/stopword heuristic. Real
@@ -213,16 +217,7 @@ def top_bigrams(docs: DataFrame, k: int = 20) -> DataFrame:
     (wordcount's M1-M9 dataflow with a 2-token key).  One explode + one
     partial→final count + a distributed top-k (ties broken by bigram so
     the cut is total)."""
-    toks = tokens_array(F.col("text"))
-    # sequence(1, stop) counts DOWN when stop < 1 (invalid slice start 0):
-    # single-token docs must short-circuit to an empty array
-    bigrams = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 1),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, 2)),
-        ),
-    ).otherwise(F.expr("CAST(array() AS ARRAY<STRING>)"))
+    bigrams = token_ngrams("text", 2, lambda g: F.concat_ws(" ", g))
     return (
         spread(docs).select(F.explode(bigrams).alias("bigram"))
         .where(F.col("bigram") != "")

@@ -12,7 +12,10 @@ from p2_mapreduce_spark.operators.dedup import (
     shingle_pairs,
     simhash_fingerprints,
     simhash_near_pairs,
+    winnow_fingerprints,
 )
+from p2_mapreduce_spark.operators.curation import _string_shingles
+from p2_mapreduce_spark.operators.text_analysis import top_bigrams
 from p2_mapreduce_spark.session import load_table
 
 
@@ -61,12 +64,17 @@ def test_simhash_deterministic_and_pairs_verified(spark, docs):
 
 def test_short_and_empty_docs_dont_crash_shingles(spark):
     """Regression: sequence(1, stop<1) counts DOWN in Spark → slice(start=0)
-    crash for docs shorter than the shingle width."""
+    crash for docs shorter than the shingle width (or, for winnowing,
+    than the window)."""
     df = spark.createDataFrame(
         [(1, "ab"), (2, ""), (3, "two words"), (4, None)], ["doc_id", "text"]
     )
     assert ngram_jaccard_pairs(df).count() == 0
     assert minhash_lsh_pairs(df).count() == 0
+    # the other n-gram builders share the same window helper and guard
+    assert winnow_fingerprints(df).count() == 0
+    assert _string_shingles(df, 3, "text", "doc_id").count() == 0
+    assert [tuple(r) for r in top_bigrams(df).collect()] == [("two words", 1)]
 
 
 def test_identical_docs_are_perfect_pairs(spark):

@@ -201,6 +201,32 @@ def test_df_cap_is_broadcast_anti_join(spark, sf_dir):
     ), plan[:2000]
 
 
+@pytest.mark.parametrize(
+    "builder", ["hashed_shingles", "winnow_fingerprints", "string_shingles", "top_bigrams"]
+)
+def test_ngram_builders_tokenize_each_document_once(spark, sf_dir, builder):
+    """Catalyst does no common-subexpression elimination inside
+    higher-order-function lambdas: an n-gram builder that re-references
+    the tokenizer expression in its window lambda re-splits each
+    document once per window (quadratic in tokens).  Every builder goes
+    through ``token_ngrams``, which binds the token array once, so the
+    optimized plan holds the tokenizer's ``split(`` exactly once."""
+    from p2_mapreduce_spark.operators import curation, dedup, text_analysis
+    from p2_mapreduce_spark.session import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    df = {
+        "hashed_shingles": lambda: dedup.hashed_shingles(docs),
+        "winnow_fingerprints": lambda: dedup.winnow_fingerprints(docs),
+        "string_shingles": lambda: curation._string_shingles(
+            docs, 5, "text", "doc_id"
+        ),
+        "top_bigrams": lambda: text_analysis.top_bigrams(docs),
+    }[builder]()
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("split(") == 1, plan[:2000]
+
+
 def test_exact_dedup_shuffles_digests_not_documents(spark, sf_dir):
     """exact_dedup's exchange must partition on the 32-byte md5, and the
     document text must be projected away BEFORE the shuffle — at 100 TB

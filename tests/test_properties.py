@@ -7,7 +7,9 @@ invariants — the properties every oracle comparison silently relies on:
 - decimal protocol: dsum is exactly the mathematical sum for 2-decimal
   inputs under ANY partitioning;
 - connected components: the iterative label propagation equals a
-  reference union-find on arbitrary small graphs.
+  reference union-find on arbitrary small graphs;
+- n-gram windows: ``token_ngrams`` equals a pure-Python n-gram
+  reference over the same split/lower/drop-empty contract.
 
 Example counts are small (each example runs Spark jobs); hypothesis still
 explores the weird corners (empty strings, astral-plane runes, negative
@@ -15,6 +17,7 @@ zero, self-loops) far better than hand-picked fixtures.
 """
 
 import decimal
+import unicodedata
 
 import duckdb
 from hypothesis import given, settings, strategies as st
@@ -22,7 +25,7 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from p2_mapreduce_spark.functions.numeric import dsum
-from p2_mapreduce_spark.functions.text import tokens_array
+from p2_mapreduce_spark.functions.text import token_ngrams, tokens_array
 from p2_mapreduce_spark.operators.graph import connected_components
 
 
@@ -547,3 +550,54 @@ def test_avi_kernels_never_raise_on_arbitrary_bytes(spark, payloads):
     for df in (avi_frame_stats(media), avi_av_stats(media)):
         out = df.collect()
         assert isinstance(out, list)
+
+
+def _py_tokens(text: str) -> list[str]:
+    """Pure-Python twin of the tokenizer contract: split on every rune
+    outside the Unicode L*/N* categories, lowercase, drop empties."""
+    spaced = "".join(
+        c if unicodedata.category(c)[0] in "LN" else " " for c in text
+    )
+    return [t.lower() for t in spaced.split()]
+
+
+#: Letters and digits (ASCII and not) whose L/N membership and
+#: lowercase agree between Java and Python, plus separators.
+_NGRAM_ALPHABET = "aBzZ09éÄγΔЖж日本٣² ,-_!\t"
+_NGRAM_WORDS = ["the", "Cat", "sat", "ÉTÉ", "日本", "٣٣", "x2"]
+_NGRAM_EDGES = [
+    None, "", " ,-! ", "one", "a b", "a b c", "v w x y z", "a a a a a a a",
+    "Ä-ä ä_Ä",
+]
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    st.lists(
+        st.one_of(
+            st.none(),
+            st.text(alphabet=_NGRAM_ALPHABET, max_size=40),
+            # few distinct words, so windows repeat within a document
+            st.lists(st.sampled_from(_NGRAM_WORDS), max_size=12).map(" ".join),
+        ),
+        max_size=8,
+    )
+)
+def test_token_ngrams_match_python_reference(spark, drawn):
+    """Every n-token window of every document, in order, duplicates
+    kept; null/empty text and documents shorter than n yield []."""
+    texts = _NGRAM_EDGES + drawn
+    ns = (2, 3, 5)
+    df = spark.createDataFrame(list(enumerate(texts)), "i long, text string")
+    got = {
+        r["i"]: [r[f"g{n}"] for n in ns]
+        for r in df.select(
+            "i", *[token_ngrams("text", n, lambda g: g).alias(f"g{n}") for n in ns]
+        ).collect()
+    }
+    for i, text in enumerate(texts):
+        toks = _py_tokens(text) if text is not None else []
+        want = [
+            [toks[j:j + n] for j in range(len(toks) - n + 1)] for n in ns
+        ]
+        assert got[i] == want, (text, got[i], want)
