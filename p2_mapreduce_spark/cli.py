@@ -92,8 +92,12 @@ def cmd_delete(spark, root: str, key: str) -> str:
     return f"deleted {key}" if removed else f"{key} not found"
 
 
+#: catalog key prefix of uploaded plugin sources (blobs, not datasets)
+PLUGIN_PREFIX = "_plugins/"
+
+
 def _plugin_blob_key(plugin_id: str) -> str:
-    return f"_plugins/{plugin_id}.py"
+    return f"{PLUGIN_PREFIX}{plugin_id}.py"
 
 
 def cmd_upload_plugin(spark, root: str, local_path: str, plugin_id: str) -> str:
@@ -215,7 +219,7 @@ def cmd_sql(
                 load_table(spark, tables_dir, t).createOrReplaceTempView(t)
     cat = _catalog(spark, root)
     for key in cat.list():
-        if key.startswith("_blobs/"):
+        if key.startswith(PLUGIN_PREFIX):
             continue
         safe = re.sub(r"[^A-Za-z0-9_]", "_", key)
         cat.load(key).createOrReplaceTempView(safe)

@@ -6,11 +6,21 @@ The reference executes ``map → FNV-hash partition → shuffle → group-by-key
 cmd/controller/manager/manager.go:1038-1173 final aggregate).  On Spark the
 same dataflow is ONE declarative plan:
 
-    input → mapInPandas(map_fn)            # M1 map (Arrow-batched)
+    input → mapInPandas(map_fn + pack)     # M1 map (Arrow-batched)
           → repartition(R, key)            # M3 hash partition + shuffle
-          → groupBy(key) + collect_list    # M4+M5 shuffle read, group-by-key
-          → pandas_udf(reduce_fn)          # M7 reduce (UDAF-like)
+          → groupBy(key) + flatten(collect_list)  # M4+M5 group-by-key
           → orderBy(key) | sortWithinPartitions(key)   # M9 | M6
+          → pandas_udf(reduce_fn)          # M7 reduce (UDAF-like)
+
+``pack`` groups each Arrow batch's emitted pairs by key: one row per
+(key, batch) carrying ``values array<string>``, every value of the key in
+that batch (or, with a combiner, its one folded partial).  Packing is
+lossless, so it works for any reducer; the shuffle carries a batch's
+vocabulary instead of one record per emitted pair.  The key sort runs on
+the grouped rows BEFORE the reduce: ``ArrowEvalPython`` keeps its child's
+ordering, so the output contract is the same, and the range-partition
+sample job behind ``orderBy`` reads JVM-side rows instead of re-running
+the Python reduce — the reduce runs exactly once per key.
 
 Stage barrier (M11), locality (M12), retries (M13) are the DAGScheduler's.
 
@@ -18,9 +28,10 @@ Deliberate semantic fixes over the reference (SURVEY.md §2.2 quirk):
 - a key's values are ALWAYS totally grouped (Spark shuffle guarantees it);
   the reference's filename-hash re-partitioning bug that splits a key
   across reducer outputs is not replicated.
-- map-side combine: when the reducer declares an algebraic ``combiner``
-  Spark runs partial aggregation automatically — the reference ships every
-  ("word","1") pair over the network (wordcount.go:32-35), we don't.
+- per-batch packing: the reference ships every ("word","1") pair over
+  the network (wordcount.go:32-35); we ship one row per (key, batch),
+  folded to one partial when the reducer declares an algebraic
+  ``combiner``.
 
 Scale notes: the Python map/reduce path exists for plugin compatibility
 (reference M14); it is Arrow-vectorized, not per-row, but 100 TB workloads
@@ -104,12 +115,22 @@ def run_mapreduce(
     order (Spark still grants total per-key grouping — the intended
     semantics).
 
+    Each map batch is packed by key before the shuffle: one row per
+    (key, batch) holding all of the key's values in that batch, so the
+    shuffle carries batch vocabularies, not pairs, and ``reduce_fn``
+    still sees every value (any reducer works).  Keys and values become
+    strings as ``pd.Series(dtype="string")`` makes them; None values are
+    dropped, None keys form one group.  The result is key-sorted before
+    the reduce, not after, so the reduce runs once per key (a sort above
+    it would re-run it in the range-partition sample job).
+
     ``combiner`` switches to the algebraic fast path: it is applied to
     each key's values inside every map batch (pre-shuffle) and again to
-    the collected partials (post-shuffle), REPLACING ``reduce_fn`` — so
-    it must satisfy ``combiner(k, hierarchical folds of xs) ==
-    reduce_fn(k, xs)`` (for count-style reducers whose values are "1",
-    an integer-sum combiner is that fold).  A ``reduce_fn`` decorated
+    the collected partials (post-shuffle), REPLACING ``reduce_fn``; a
+    None partial is dropped.  So it must satisfy ``combiner(k,
+    hierarchical folds of xs) == reduce_fn(k, xs)`` (for count-style
+    reducers whose values are "1", an integer-sum combiner is that
+    fold).  A ``reduce_fn`` decorated
     :func:`associative` combines with itself automatically.  Per-key
     state on the reduce side is then one partial per upstream batch —
     the skewed hot key that breaks the collect_list contract streams
@@ -122,66 +143,63 @@ def run_mapreduce(
         F.col(value_col).cast("string").alias("contents"),
     )
 
+    def strings(xs: list) -> list:
+        # xs coerced as pd.Series(xs, dtype="string") coerces them (str(),
+        # bytes decoded, None/NaN null), nulls dropped: what collect_list
+        # over the coerced column gives
+        if all(type(x) is str for x in xs):
+            return xs
+        return [x for x in pd.array(xs, dtype="string").tolist() if x is not pd.NA]
+
     def apply_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # pack: one row per (key, batch), so the shuffle carries the
+        # batch's vocabulary, not its tokens.  Without a combiner the
+        # list holds every value (lossless); with one, the folded partial.
+        # Keys group by their string form (None/NaN keys form one group).
         for pdf in batches:
-            keys, values = [], []
+            acc: dict = {}
             for fname, contents in zip(pdf["filename"], pdf["contents"]):
                 for k, v in map_fn(fname if fname is not None else "", contents or ""):
-                    keys.append(k)
-                    values.append(v)
-            yield pd.DataFrame({"key": pd.Series(keys, dtype="string"),
-                                "value": pd.Series(values, dtype="string")})
-
-    def apply_map_combine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # map-side combine: fold each key's values within the batch so
-        # the shuffle carries one partial per (key, batch) — state here
-        # is bounded by the batch size, never the corpus
-        for pdf in batches:
-            acc: dict[str, list] = {}
-            for fname, contents in zip(pdf["filename"], pdf["contents"]):
-                for k, v in map_fn(fname if fname is not None else "", contents or ""):
+                    if type(k) is not str:
+                        k = (strings([k]) or [None])[0]
                     acc.setdefault(k, []).append(v)
-            yield pd.DataFrame({
-                "key": pd.Series(list(acc.keys()), dtype="string"),
-                "value": pd.Series(
-                    [combiner(k, vs) for k, vs in acc.items()], dtype="string"
-                ),
-            })
+            if combiner is not None:
+                packed = [strings([combiner(k, vs)]) for k, vs in acc.items()]
+            else:
+                packed = [strings(vs) for vs in acc.values()]
+            yield pd.DataFrame({"key": pd.Series(list(acc), dtype="string"),
+                                "values": pd.Series(packed, dtype=object)})
 
-    mapped = records.mapInPandas(
-        apply_map_combine if combiner is not None else apply_map,
-        schema="key string, value string",
-    )
+    mapped = records.mapInPandas(apply_map, schema="key string, values array<string>")
 
     # M3: hash partition on key. Spark's HashPartitioner replaces FNV-1a%R
     # (storage-node/main.go:783-787); results are partition-layout
     # independent so the hash choice is unobservable (tested).
     shuffled = mapped.repartition(num_partitions, "key")
 
-    # M5 group-by-key + M7 reduce. collect_list gathers the value list per
-    # key; the reduce fn is applied Arrow-batched over many keys at once
-    # (NOT one Python call per group — pandas_udf scalar on the grouped
-    # aggregate output).
-    grouped = shuffled.groupBy("key").agg(F.collect_list("value").alias("values"))
+    # M5 group-by-key: concatenate the key's per-batch lists.
+    grouped = shuffled.groupBy("key").agg(
+        F.flatten(F.collect_list("values")).alias("values")
+    )
+    # M9: global key sort (manager.go:1128-1132), range-partitioned with
+    # no single-node merge; M10/M6: sorted within each output partition.
+    # Sorted BEFORE the reduce so the range-partition sample job runs no
+    # Python; ArrowEvalPython keeps its child's ordering.
+    grouped = grouped.orderBy("key") if aggregate else grouped.sortWithinPartitions("key")
 
     final_fn = combiner if combiner is not None else reduce_fn
 
+    # M7 reduce, Arrow-batched over many keys at once (NOT one Python
+    # call per group — pandas_udf scalar on the grouped aggregate output).
     @F.pandas_udf("string")
     def apply_reduce(keys: pd.Series, values: pd.Series) -> pd.Series:
         return pd.Series(
             [final_fn(k, list(v)) for k, v in zip(keys, values)], dtype="string"
         )
 
-    reduced = grouped.select(
+    return grouped.select(
         F.col("key"), apply_reduce(F.col("key"), F.col("values")).alias("value")
     )
-
-    if aggregate:
-        # M9: global key sort (manager.go:1128-1132). Range-partitioned
-        # distributed sort — no single-node merge like the controller does.
-        return reduced.orderBy("key")
-    # M10/M6: deterministic within each output partition only.
-    return reduced.sortWithinPartitions("key")
 
 
 def run_mapreduce_by_name(

@@ -17,6 +17,12 @@ import re
 from pyspark.sql import DataFrame
 
 
+#: exec node names that run a Python worker: the EvalPython family
+#: (Arrow/Batch, UDTF forms), the Arrow window and aggregate UDF nodes,
+#: and every map / group / cogroup / state node running "In" Pandas or Arrow
+_PYTHON_NODE = re.compile(r"\w*(?:Python(?:UDTF)?|In(?:Pandas|Arrow)\w*)")
+
+
 def physical_plan(df: DataFrame) -> str:
     """The formatted physical plan (what ``df.explain('formatted')``
     prints), as a string."""
@@ -43,7 +49,6 @@ def plan_report(df: DataFrame) -> dict:
         "read_schema_cols": [
             [c.split(":")[0] for c in s.split(",") if c] for s in read_schemas
         ],
-        "has_python_worker": "BatchEvalPython" in plan or "ArrowEvalPython" in plan
-        or "MapInPandas" in plan or "FlatMapGroupsInPandas" in plan,
+        "has_python_worker": any(_PYTHON_NODE.fullmatch(n) for n in nodes),
         "plan": plan,
     }

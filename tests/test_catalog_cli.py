@@ -132,6 +132,22 @@ def test_cli_uploaded_plugin_runs_end_to_end(spark, tmp_path):
     assert got == {"3": "2", "2": "1"}  # two 3-char lines, one 2-char line
 
 
+def test_cli_sql_after_upload_plugin(spark, tmp_path):
+    """Plugin sources share the catalog namespace with datasets; `sql`
+    registers only the datasets as views, so an uploaded plugin must not
+    break it."""
+    root = str(tmp_path / "dfs")
+    src = tmp_path / "in.txt"
+    src.write_text("alpha beta\nbeta\n")
+    plugin = tmp_path / "plug.py"
+    plugin.write_text("def plug_map(filename, contents):\n    yield contents, '1'\n")
+    cli.main(["--root", root, "upload", str(src), "docs"], spark=spark)
+    cli.main(["--root", root, "upload_plugin", str(plugin), "plug"], spark=spark)
+    assert cli.main(["--root", root, "list"], spark=spark) == "_plugins/plug.py\ndocs"
+    out = cli.main(["--root", root, "sql", "SELECT COUNT(*) AS n FROM docs"], spark=spark)
+    assert out.splitlines() == ["n", "2"]
+
+
 def test_cli_upload_plugin_rejects_missing_symbols(spark, tmp_path):
     bad = tmp_path / "bad.py"
     bad.write_text("def unrelated():\n    pass\n")

@@ -133,6 +133,83 @@ def test_registry_wordcount_combiner_replaces_len(spark, tiny_docs):
     }
 
 
+@pytest.mark.parametrize("aggregate", [True, False])
+def test_reduce_runs_once_per_key(spark, tiny_docs, aggregate):
+    """The key sort sits below the pandas_udf reduce, so the aggregate
+    path's range-partition sample job reads JVM-side grouped rows and
+    never calls the reduce: one call per distinct key on both paths."""
+    calls = spark.sparkContext.accumulator(0)
+
+    def counting_reduce(key, values):
+        calls.add(1)
+        return wordcount_reduce(key, values)
+
+    out = run_mapreduce(tiny_docs, wordcount_map, counting_reduce, aggregate=aggregate)
+    assert {r["key"]: int(r["value"]) for r in out.collect()} == EXPECTED
+    assert calls.value == len(EXPECTED)
+
+
+def test_aggregate_plan_sorts_before_the_reduce(spark, tiny_docs):
+    """Plan pin for the sort-before-reduce shape: no Exchange above
+    ArrowEvalPython, and since ArrowEvalPython keeps its child's
+    ordering, a caller's sortWithinPartitions("key") plans no extra Sort."""
+    import re
+
+    from p2_mapreduce_spark.plans import physical_plan
+
+    out = run_mapreduce(tiny_docs, wordcount_map, wordcount_reduce, aggregate=True)
+    tree = physical_plan(out).split("\n\n")[0].splitlines()
+    py = next(i for i, ln in enumerate(tree) if "ArrowEvalPython" in ln)
+    assert not any("Exchange" in ln for ln in tree[:py]), tree
+    n_sorts = lambda df: len(re.findall(r"^\(\d+\) Sort\b", physical_plan(df), re.M))
+    assert n_sorts(out.sortWithinPartitions("key")) == n_sorts(out) == 1
+
+
+def _coercion_map(filename, contents):
+    # an int value, a None key and a None value per token, a non-str
+    # key and value once per row
+    yield 7, 2.5
+    for tok in contents.split():
+        yield tok, 1
+        yield None, tok
+        yield tok, None
+
+
+def _coercion_combiner(key, values):
+    # None for "y" (on both sides of the shuffle), else the largest value
+    if key == "y":
+        return None
+    return max((str(v) for v in values if v is not None), default=None)
+
+
+@pytest.mark.parametrize("aggregate", [True, False])
+@pytest.mark.parametrize(
+    "combiner, want",
+    [
+        (None, [("7", "'2.5'|'2.5'|'2.5'"), ("x", "'1'"), ("y", "'1'|'1'"),
+                ("z", "'1'"), (None, "'x'|'y'|'y'|'z'")]),
+        (_coercion_combiner, [("7", "2.5"), ("x", "1"), ("y", None),
+                              ("z", "1"), (None, "z")]),
+    ],
+    ids=["plain", "combiner"],
+)
+def test_coercion_contract(spark, aggregate, combiner, want):
+    """Keys and values become strings as pd.Series(dtype="string") makes
+    them; None values leave the plain path's lists, None keys form one
+    group, and a None combiner partial is dropped (the key's value comes
+    out null).  Expected rows are the outputs of the ship-every-pair
+    dataflow this packing replaced."""
+    df = spark.createDataFrame(
+        [("a", "x y"), ("b", "y z"), (None, None)], "filename string, contents string"
+    )
+    out = run_mapreduce(
+        df, _coercion_map, lambda k, vs: "|".join(sorted(map(repr, vs))),
+        aggregate=aggregate, combiner=combiner,
+    )
+    rows = [(r["key"], r["value"]) for r in out.collect()]
+    assert sorted(rows, key=lambda r: (r[0] is None, r[0] or "")) == want
+
+
 def test_combiner_bounds_per_key_state_on_skewed_input(spark):
     """Skewed-key fixture: one key carries 50k values spread over many
     input rows/partitions.  With the combiner, no reduce-side value list

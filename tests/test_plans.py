@@ -2,6 +2,8 @@
 scale-critical choices the operators are designed around (pushdown,
 pruning, broadcast, partial aggregation, no-Python hot paths)."""
 
+import re
+
 import pytest
 
 import __spark_entry__ as entry_mod
@@ -466,9 +468,68 @@ _PY_NODE_KINDS = (
     "ArrowEvalPython",
     "BatchEvalPython",
     "FlatMapGroupsInPandas",
-    "PythonMapInArrow",
+    "MapInArrow",
     "FlatMapGroupsInPandasWithState",
 )
+
+
+def _python_node_df(spark, kind):
+    """One tiny DataFrame whose physical plan holds the exec node ``kind``."""
+    import pandas as pd
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame([(1, 1.0), (1, 2.0), (2, 3.0)], "k long, v double")
+
+    @F.pandas_udf("double")
+    def mean(v: pd.Series) -> float:
+        return v.mean()
+
+    build = {
+        "MapInPandas": lambda: df.mapInPandas(lambda it: it, df.schema),
+        "MapInArrow": lambda: df.mapInArrow(lambda it: it, df.schema),
+        "ArrowEvalPython": lambda: df.select(
+            F.pandas_udf(lambda v: v + 1, "double")("v")
+        ),
+        "BatchEvalPython": lambda: df.select(F.udf(lambda v: v + 1, "double")("v")),
+        "FlatMapGroupsInPandas": lambda: df.groupBy("k").applyInPandas(
+            lambda pdf: pdf, df.schema
+        ),
+        "FlatMapGroupsInArrow": lambda: df.groupBy("k").applyInArrow(
+            lambda t: t, df.schema
+        ),
+        "FlatMapCoGroupsInPandas": lambda: df.groupBy("k")
+        .cogroup(df.groupBy("k"))
+        .applyInPandas(lambda a, b: a, df.schema),
+        "ArrowWindowPython": lambda: df.select(
+            mean("v").over(Window.partitionBy("k"))
+        ),
+        "ArrowAggregatePython": lambda: df.groupBy("k").agg(mean("v")),
+    }
+    return build[kind]()
+
+
+@pytest.mark.parametrize(
+    "kind",
+    [
+        "MapInPandas",
+        "MapInArrow",
+        "ArrowEvalPython",
+        "BatchEvalPython",
+        "FlatMapGroupsInPandas",
+        "FlatMapGroupsInArrow",
+        "FlatMapCoGroupsInPandas",
+        "ArrowWindowPython",
+        "ArrowAggregatePython",
+    ],
+)
+def test_has_python_worker_sees_every_python_node(spark, kind):
+    """``has_python_worker`` backs the "hot paths never invoke Python"
+    pins, so it must flag every Python exec node Spark plans — not only
+    the four the Arrow-eval and map paths use."""
+    r = plan_report(_python_node_df(spark, kind))
+    assert re.search(rf"^\(\d+\) {kind}\b", r["plan"], re.M), r["plan"]
+    assert r["has_python_worker"]
 
 
 def test_allowlisted_python_stages_have_declared_shape(spark, sf_dir):
