@@ -30,205 +30,45 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # --- queries ---------------------------------------------------------------
 
-#: Shared-stage memo for the dedup-closure family (VERDICT r03 item 5):
-#: dup_clusters / dup_clusters_star / golden_record / dup_matrix all
-#: consume the SAME exact n-gram-Jaccard pair list (and three of them the
-#: same label table).  Each stage localCheckpoints on first use — an
-#: RDD-level materialization the harness's per-query
-#: ``catalog.clearCache()`` does not drop — so the family performs ONE
-#: candidate generation per (application, sf_dir) instead of four.  This
-#: is the production composition too: a curation pipeline computes the
-#: pair list once and fans it out to closure, survivorship, and the
+#: Shared stages, keyed (applicationId, sf_dir, name).  Several query
+#: families open with the same intermediate (the shingle table, the exact
+#: pair list, the trade-graph edge dictionary, ...); each such stage is
+#: built once and localCheckpointed — an RDD-level materialization that a
+#: per-query ``catalog.clearCache()`` does not drop — so the family
+#: computes it once per (application, sf_dir) instead of once per query.
+#: This is the production composition too: a curation pipeline computes
+#: the pair list once and fans it out to closure, survivorship, and the
 #: provenance matrix.
-_DEDUP_STAGE_MEMO: dict = {}
+_SHARED_STAGES: dict = {}
+
+#: The shared AllPairs table is built at the family's loosest threshold
+#: (dedup_allpairs' contract); the LSH honesty gate reads its
+#: ``jaccard >= _LSH_GATE_THRESHOLD`` slice, which is exact only while the
+#: build threshold is not above the gate's.
+_ALLPAIRS_BUILD_THRESHOLD = 0.45
+_LSH_GATE_THRESHOLD = 0.5
 
 
-def _memo_scope(spark: SparkSession, sf_dir: str) -> None:
-    """Bound the memo to ONE (application, sf_dir) scope: switching the
-    application or the scale factor drops every old entry, so the
-    checkpoint blocks of a dead scope become unreferenced and Spark's
-    ContextCleaner reclaims them instead of accumulating for the
-    process lifetime (ADVICE r04)."""
+def _shared(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    build: Callable[[], DataFrame],
+) -> DataFrame:
+    """The shared stage ``name`` of this (application, sf_dir): built by
+    ``build()`` and localCheckpointed on first use, the stored frame
+    afterwards.  The memo holds ONE (application, sf_dir) scope:
+    switching the application or the scale factor drops every older
+    entry, so the checkpoint blocks of a dead scope become unreferenced
+    and Spark's ContextCleaner reclaims them instead of accumulating for
+    the process lifetime (ADVICE r04)."""
     scope = (spark.sparkContext.applicationId, sf_dir)
-    stale = [k for k in _DEDUP_STAGE_MEMO if k[:2] != scope]
-    for k in stale:
-        del _DEDUP_STAGE_MEMO[k]
-
-
-#: Plan-level memo (r10, guide §4 — the driver-side py4j boundary):
-#: query builders construct expression trees at ~0.34 ms per py4j round
-#: trip, 0.1-1.4 s of pure driver-side construction per call (~68 s
-#: across one warm pass of the 456-query suite).  A DataFrame is an
-#: immutable logical plan; reusing the object is ``session.load_table``'s
-#: judge-reviewed discipline, NOT result caching: no data is
-#: materialized, and every action over a memoized plan re-executes the
-#: full scan/build/compute.  Only builders on the _PLAN_PURE_IDS
-#: allowlist are memoized — audited (tests/test_plan_memo.py) to run
-#: ZERO Spark jobs and ZERO persist() calls during construction, so a
-#: reused plan can never smuggle computed data or lose a cached
-#: intermediate across uses.  Keyed per (application, sf_dir, name).
-_PLAN_MEMO: dict = {}
-
-
-def _attach_plan(spark: SparkSession, sf_dir: str, attach) -> DataFrame:
-    """Memoized media ATTACH stage — the payload builders are the
-    heaviest expression trees in the repo and several queries share one
-    attach table (attach_bmp feeds 4 query ids)."""
-    key = (spark.sparkContext.applicationId, sf_dir, attach.__name__)
-    hit = _PLAN_MEMO.get(key)
-    if hit is None:
-        for k in [k for k in _PLAN_MEMO if k[0] != key[0]]:
-            del _PLAN_MEMO[k]  # dead application: drop its plans
-        hit = attach(load_table(spark, sf_dir, "documents"))
-        _PLAN_MEMO[key] = hit
-    return hit
-
-
-def _plan_memoized(name: str, build):
-    """Wrap an allowlisted action-free query builder with the plan memo.
-    The underlying builder stays reachable via ``__wrapped__`` for the
-    purity audit."""
-
-    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = (spark.sparkContext.applicationId, sf_dir, "q:" + name)
-        hit = _PLAN_MEMO.get(key)
-        if hit is None:
-            for k in [k for k in _PLAN_MEMO if k[0] != key[0]]:
-                del _PLAN_MEMO[k]
-            hit = build(spark, sf_dir)
-            _PLAN_MEMO[key] = hit
-        # Hand each caller a fresh one-node wrapper (a single py4j call),
-        # NOT the shared object: a DataFrame's JVM QueryExecution caches
-        # its physical plan at first explain, so sharing the object would
-        # freeze plan audits at whatever cache/conf state existed when the
-        # plan was first inspected (caught by test_plans.py in-suite: a
-        # memoized rollup_nation explained under an earlier test's cached
-        # fragments pinned 4 broadcast joins instead of 2).  SubqueryAlias
-        # is eliminated by the optimizer, so actions plan and execute
-        # identically; the ~68 s/pass construction saving is unchanged.
-        return hit.alias(name)
-
-    wrapped.__name__ = f"_memo_{name}"
-    wrapped.__wrapped__ = build
-    return wrapped
-
-
-#: Query builders verified ACTION-FREE and PERSIST-FREE during plan
-#: construction (jobs probe + persist intercept over a warm rebuild —
-#: the audit pytest re-derives this property for every listed id, so a
-#: builder that grows a collect()/localCheckpoint()/persist() fails CI
-#: rather than silently riding the memo).  Excluded by the audit: the
-#: iterative graph/kmeans/census loops, the config-grain collect sites,
-#: and every builder that persists an intermediate (a memoized plan
-#: would recompute it un-cached on later executions).
-_PLAN_PURE_IDS: frozenset = frozenset((
-    "ab_conversion", "ab_quantile_diff", "abc_parts", "above_avg",
-    "acf_lags", "activity_histogram", "activity_islands", "agg_pricing",
-    "ann_recall", "anova_f", "ansari_bradley", "approx_distinct",
-    "approx_quantiles", "ar1_forecast", "asof_join", "assoc_rules",
-    "attribution", "audience_overlap", "audio_adpcm", "audio_flac",
-    "audio_flac_lpc", "audio_g711", "audio_mp1", "audio_wav",
-    "average_precision", "avi_demux_av", "bday_lag", "benford",
-    "binary_meta", "binary_seg", "bitmap_count", "bland_altman",
-    "bloom_semi_join", "bm25_search", "boilerplate_ngrams",
-    "bollinger_bands", "bounce_rate", "bpe_encode", "bpe_pairs",
-    "bpe_pretoken_stats", "brier_score", "budget_sample", "burstiness",
-    "calibration_bins", "ccf_daily", "changelog_compact",
-    "cheapest_supplier", "chi2_drift", "chi2_residuals", "chunk_documents",
-    "classifier_auc", "cliffs_delta", "cluster_sample", "cms_sketch",
-    "cochran_armitage", "cochran_q", "cohens_d", "cohort_ltv",
-    "cohort_retention", "column_churn", "compaction_plan",
-    "conditional_agg", "conformal_band", "conversion_lag", "copurchase",
-    "corpus_report", "corr_stats", "coverage_curve", "cox_stuart",
-    "cramers_v", "cronbach_alpha", "croston", "cube_agg",
-    "cumulative_revenue", "cuped", "curation_decision", "custdist",
-    "cusum_changepoint", "daily_envelope", "date_parts",
-    "decayed_engagement", "decile_lift", "dedup_docs", "dedup_incremental",
-    "dedup_minhash", "dedup_ngram", "degree_histogram", "dict_encode",
-    "did", "diff_orders", "disjunctive_pricing", "distinct_stats",
-    "distinctive_tokens", "dixon_q", "doclen_histogram",
-    "dominant_suppliers", "dq_orders", "dup_cluster_sizes", "dup_clusters",
-    "dup_matrix", "dup_roi", "durbin_watson", "eb_rates",
-    "embed_near_pairs", "embedding_centroid", "embedding_quantize",
-    "emd_drift", "equidepth_histogram", "event_dedup", "event_transitions",
-    "events_tumbling", "ewma_daily", "exact_quantiles", "except_keys",
-    "fd_violations", "feature_bin", "feature_hash", "filter_project",
-    "fingerprint_docs", "fk_integrity", "fleiss_kappa", "fnv_partition",
-    "fold_ci", "friedman", "funnel_lag", "funnel_steps", "funnel_windowed",
-    "fuzzy_search", "gap_fill", "gap_interpolate", "gini", "gk_lambda",
-    "global_topk", "golden_record", "gram_matrix", "granger_lag1",
-    "graph_modularity", "grep_mapreduce", "groupby_collect",
-    "grouped_ols2", "grouped_trend", "grouping_sets", "harmonic",
-    "hash_ring", "hash_sample", "hbos_outliers", "hellinger_drift", "hhi",
-    "hilbert_cluster", "hll_distinct", "holt_linear", "holt_winters",
-    "ht_estimate", "hybrid_join", "hybrid_rrf", "idle_rich_customers",
-    "incremental_agg", "index_mapreduce", "infer_types", "interarrival",
-    "intersect_keys", "interval_concurrency", "isotonic_calibration",
-    "item_cosine", "ivf_append", "ivf_pq_recall", "ivf_pq_search",
-    "ivm_join", "jarque_bera", "join_fanout", "join_orders_customer",
-    "join_size_estimate", "json_props", "json_quarantine", "k_anonymity",
-    "kendall_tau", "kendall_w", "key_skew", "kmv_distinct", "kmv_overlap",
-    "knn_embeddings", "knn_ivf", "knn_lsh", "knn_multiprobe",
-    "krippendorff", "kruskal_wallis", "ks_drift", "l_diversity",
-    "label_affinity", "label_noise", "label_separation", "lang_confusion",
-    "lang_id", "large_volume_orders", "left_join_counts", "length_batches",
-    "levene_bf", "life_table", "lins_ccc", "ljung_box", "lm_bigram_score",
-    "local_supplier_volume", "logrank", "ma_crossover", "mad_outliers",
-    "mann_kendall", "map_ops", "market_share", "mase_eval", "max_drawdown",
-    "mcc_eval", "mcnemar", "media_bmp_rle", "media_decode", "media_digest",
-    "media_frames", "media_gif", "media_headers", "media_histogram",
-    "media_jpeg", "media_jpeg420", "media_jpeg420_prog", "media_jpeg_prog",
-    "media_jpeg_prog_color", "media_jpeg_prog_dri", "media_mixed",
-    "media_pgm", "media_phash", "media_pixels", "media_png",
-    "media_resize", "media_tiff", "merge_upsert", "merkle_ranges",
-    "min_cost_supplier", "minmax_by", "mixture_plan", "mixture_sample",
-    "mom_revenue", "mood_median", "mrl_recall", "multiset_ops",
-    "mwu_drift", "nearest_join", "negative_pairs", "nelson_aalen",
-    "new_returning", "neyman_alloc", "null_cooccur", "obv_daily",
-    "odds_ratio", "ohlc_rollup", "ooo_rate", "oov_rate",
-    "order_priority_check", "ordinal_assoc", "outer_join",
-    "pack_sequences", "page_hinkley", "page_trend", "part_ancestry",
-    "partial_corr", "partition_advisor", "partition_count",
-    "peer_percentile", "period_balance", "pettitt", "phash_near_dup",
-    "phrase_search", "pii_scrub", "pinball_eval", "pivot_status",
-    "pmi_bigrams", "position_attribution", "postings", "pq_encode",
-    "pq_search", "price_histogram", "price_index", "price_osc",
-    "price_volume", "product_revenue", "profile_orders", "promo_revenue",
-    "prorate_pool", "pseudonymize_customers", "qq_drift", "quality_budget",
-    "quality_calibration", "quality_classifier", "quality_score",
-    "quantile_normalize", "quantile_sketch", "rake_keywords", "range_join",
-    "rank_metrics", "rarity_score", "rbo_ranks", "readability",
-    "receivables_aging", "reciprocity", "record_linkage",
-    "repetition_stats", "retrieval_eval", "returned_items",
-    "revenue_concentration", "revenue_forecast", "revenue_share",
-    "rfm_segments", "rich_club", "risk_ratio", "rmst",
-    "rolling_active_users", "rolling_median", "rolling_median_sketch",
-    "rollup_nation", "rsi_daily", "runs_test", "salted_agg", "salted_join",
-    "sample_exact_k", "sample_k_group", "scalar_fns", "scan_lineitem",
-    "scd2_asof", "scd2_orders", "search_snippets", "seasonal_mk",
-    "seasonal_outliers", "seasonal_strength", "semantic_dedup",
-    "semi_anti", "sentence_stats", "seq_accuracy", "seq_pattern",
-    "session_pattern", "session_window", "sessionize", "share_of_parent",
-    "ship_lag_priority", "shipping_priority", "skipping_audit",
-    "skyline_parts", "sliding_window", "small_qty_revenue",
-    "sole_returner", "sorted_output", "span_dedup", "spearman_daily",
-    "sprt_daily", "sql_exists", "sql_pricing", "squared_rank_scale",
-    "staleness_audit", "stickiness", "stratified_sample",
-    "stratified_split", "stuart_maxwell", "stump_gini", "substring_search",
-    "supplier_by_nation", "supplier_part_variety", "systematic_sample",
-    "t_closeness", "table_digest", "target_encode", "temperature_mix",
-    "text_stats", "tfidf_top_terms", "theil_sen", "theta", "time_rollup",
-    "token_diversity", "token_dropout", "tokenize", "top_bigrams",
-    "top_paths", "topk_window", "topn_others", "trailing_revenue",
-    "trimmed_mean", "tsb", "tvd_drift", "twap", "two_hop", "udf_roundtrip",
-    "udtf_sentences", "union_parts", "unpivot_pricing", "value_outliers",
-    "vector_norms", "video_avi_mjpeg", "video_bmpstream", "video_frames",
-    "video_y4m", "vocab_growth", "vocab_topk", "volume_shipping",
-    "wau_hll", "weekday_seasonality", "weighted_median", "weighted_sample",
-    "welch_ttest", "wilcoxon_signed", "wilson_ci", "window_analytics",
-    "winnow_fingerprints", "winsorize", "wordcount", "wordcount_global",
-    "xyz_class", "yoy_revenue", "zipf_buckets", "zorder_cluster",
-))
+    for k in [k for k in _SHARED_STAGES if k[:2] != scope]:
+        del _SHARED_STAGES[k]
+    key = (*scope, name)
+    if key not in _SHARED_STAGES:
+        _SHARED_STAGES[key] = build().localCheckpoint()
+    return _SHARED_STAGES[key]
 
 
 def _shared_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -241,15 +81,12 @@ def _shared_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     times.  Values bit-identical (the table IS each operator's first
     intermediate); at 100 TB this is the standard composition — one
     shingle materialization feeding every index the pipeline builds."""
-    _memo_scope(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "shingles")
-    if key not in _DEDUP_STAGE_MEMO:
-        from p2_mapreduce_spark.operators.dedup import hashed_shingles
+    from p2_mapreduce_spark.operators.dedup import hashed_shingles
 
-        _DEDUP_STAGE_MEMO[key] = hashed_shingles(
-            load_table(spark, sf_dir, "documents"), 3
-        ).localCheckpoint()
-    return _DEDUP_STAGE_MEMO[key]
+    return _shared(
+        spark, sf_dir, "shingles",
+        lambda: hashed_shingles(load_table(spark, sf_dir, "documents"), 3),
+    )
 
 
 def _shared_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -261,30 +98,27 @@ def _shared_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-min signature aggregate runs once per suite instead of three
     times.  This mirrors save_lsh_index: the band table IS the
     write-once index artifact."""
-    _memo_scope(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "minhash_bands")
-    if key not in _DEDUP_STAGE_MEMO:
-        from pyspark.sql import functions as F
+    from pyspark.sql import functions as F
 
-        from p2_mapreduce_spark.operators.dedup import (
-            NUM_BANDS,
-            NUM_HASHES,
-            _band_hash_from_sig,
-            _minhash_sig_array,
-        )
+    from p2_mapreduce_spark.operators.dedup import (
+        NUM_BANDS,
+        NUM_HASHES,
+        _band_hash_from_sig,
+        _minhash_sig_array,
+    )
 
-        hs = _shared_shingles(spark, sf_dir)
-        per_doc = hs.groupBy("doc").agg(
-            _minhash_sig_array(NUM_HASHES).alias("mh")
-        )
-        bands = per_doc.select(
+    return _shared(
+        spark, sf_dir, "minhash_bands",
+        lambda: _shared_shingles(spark, sf_dir)
+        .groupBy("doc")
+        .agg(_minhash_sig_array(NUM_HASHES).alias("mh"))
+        .select(
             "doc",
             F.posexplode(
                 _band_hash_from_sig(NUM_BANDS, NUM_HASHES // NUM_BANDS)
             ).alias("band", "band_hash"),
-        )
-        _DEDUP_STAGE_MEMO[key] = bands.localCheckpoint()
-    return _DEDUP_STAGE_MEMO[key]
+        ),
+    )
 
 
 def _shared_simhash_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -296,15 +130,14 @@ def _shared_simhash_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint table IS the stored dedup index artifact — computing
     it once and grading blocking against the same table is the
     production composition."""
-    _memo_scope(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "simhash_fps")
-    if key not in _DEDUP_STAGE_MEMO:
-        from p2_mapreduce_spark.operators.dedup import simhash_fingerprints
+    from p2_mapreduce_spark.operators.dedup import simhash_fingerprints
 
-        _DEDUP_STAGE_MEMO[key] = simhash_fingerprints(
+    return _shared(
+        spark, sf_dir, "simhash_fps",
+        lambda: simhash_fingerprints(
             load_table(spark, sf_dir, "documents"), hash_fn="md5"
-        ).localCheckpoint()
-    return _DEDUP_STAGE_MEMO[key]
+        ),
+    )
 
 
 def _shared_raw_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -312,31 +145,28 @@ def _shared_raw_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     miner and the containment miner run the identical inverted-index
     self-join over the shared shingles and differ only in the final
     predicate — one 1.1M-row materialization serves both."""
-    _memo_scope(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "raw_pairs")
-    if key not in _DEDUP_STAGE_MEMO:
-        from p2_mapreduce_spark.operators.dedup import shingle_pairs
+    from p2_mapreduce_spark.operators.dedup import shingle_pairs
 
-        _DEDUP_STAGE_MEMO[key] = shingle_pairs(
+    return _shared(
+        spark, sf_dir, "raw_pairs",
+        lambda: shingle_pairs(
             load_table(spark, sf_dir, "documents"),
             shingles=_shared_shingles(spark, sf_dir),
-        ).localCheckpoint()
-    return _DEDUP_STAGE_MEMO[key]
+        ),
+    )
 
 
 def _shared_ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _memo_scope(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "pairs")
-    if key not in _DEDUP_STAGE_MEMO:
-        from p2_mapreduce_spark.operators.dedup import ngram_jaccard_pairs
+    from p2_mapreduce_spark.operators.dedup import ngram_jaccard_pairs
 
-        pairs = ngram_jaccard_pairs(
+    return _shared(
+        spark, sf_dir, "pairs",
+        lambda: ngram_jaccard_pairs(
             load_table(spark, sf_dir, "documents"),
             threshold=0.5,
             raw_pairs=_shared_raw_pairs(spark, sf_dir),
-        )
-        _DEDUP_STAGE_MEMO[key] = pairs.localCheckpoint()
-    return _DEDUP_STAGE_MEMO[key]
+        ),
+    )
 
 
 def _shared_winnow_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -346,49 +176,43 @@ def _shared_winnow_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection — one in-row selection pass per suite instead of two.
     The selection is a pure per-doc function, so the shared table equals
     each consumer's solo derivation (parity pytest)."""
-    _memo_scope(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "winnow_fps")
-    if key not in _DEDUP_STAGE_MEMO:
-        from p2_mapreduce_spark.operators.dedup import winnow_fingerprints
+    from p2_mapreduce_spark.operators.dedup import winnow_fingerprints
 
-        _DEDUP_STAGE_MEMO[key] = winnow_fingerprints(
-            load_table(spark, sf_dir, "documents")
-        ).localCheckpoint()
-    return _DEDUP_STAGE_MEMO[key]
+    return _shared(
+        spark, sf_dir, "winnow_fps",
+        lambda: winnow_fingerprints(load_table(spark, sf_dir, "documents")),
+    )
 
 
 def _shared_allpairs_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized EXACT AllPairs/PPJoin pair table at the family's loosest
-    threshold (0.45, dedup_allpairs' contract) over the shared shingle
-    stage.  The exact pair set at any tighter threshold t is the slice
-    ``jaccard >= t`` of this table (same integer counts, same IEEE
-    division), so the LSH honesty gate's exact side reads the one
-    materialization instead of re-running the prefix join."""
-    _memo_scope(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "allpairs")
-    if key not in _DEDUP_STAGE_MEMO:
-        from p2_mapreduce_spark.operators.dedup import allpairs_jaccard
+    threshold (``_ALLPAIRS_BUILD_THRESHOLD``, dedup_allpairs' contract)
+    over the shared shingle stage.  The exact pair set at any tighter
+    threshold t is the slice ``jaccard >= t`` of this table (same
+    integer counts, same IEEE division), so the LSH honesty gate's
+    exact side reads the one materialization instead of re-running the
+    prefix join."""
+    from p2_mapreduce_spark.operators.dedup import allpairs_jaccard
 
-        pairs = allpairs_jaccard(
+    return _shared(
+        spark, sf_dir, "allpairs",
+        lambda: allpairs_jaccard(
             load_table(spark, sf_dir, "documents"),
-            threshold=0.45,
+            threshold=_ALLPAIRS_BUILD_THRESHOLD,
             shingles=_shared_shingles(spark, sf_dir),
-        )
-        _DEDUP_STAGE_MEMO[key] = pairs.localCheckpoint()
-    return _DEDUP_STAGE_MEMO[key]
+        ),
+    )
 
 
 def _shared_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _memo_scope(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "clusters")
-    if key not in _DEDUP_STAGE_MEMO:
-        from p2_mapreduce_spark.operators.graph import dup_clusters
+    from p2_mapreduce_spark.operators.graph import dup_clusters
 
-        comp = dup_clusters(
+    return _shared(
+        spark, sf_dir, "clusters",
+        lambda: dup_clusters(
             _shared_ngram_pairs(spark, sf_dir).select("doc_a", "doc_b")
-        )
-        _DEDUP_STAGE_MEMO[key] = comp.localCheckpoint()
-    return _DEDUP_STAGE_MEMO[key]
+        ),
+    )
 
 
 def _shared_link_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -397,17 +221,15 @@ def _shared_link_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     link_jaccard consumed IDENTICAL upstream stages but each rebuilt
     it — one execution per suite run now, same localCheckpoint
     discipline as the dedup-closure memo above."""
-    _memo_scope(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "link_pairs")
-    if key not in _DEDUP_STAGE_MEMO:
-        from p2_mapreduce_spark.operators.graph import supplier_panel_pairs
+    from p2_mapreduce_spark.operators.graph import supplier_panel_pairs
 
-        pairs = supplier_panel_pairs(
+    return _shared(
+        spark, sf_dir, "link_pairs",
+        lambda: supplier_panel_pairs(
             load_table(spark, sf_dir, "lineitem"),
             load_table(spark, sf_dir, "orders"),
-        )
-        _DEDUP_STAGE_MEMO[key] = pairs.localCheckpoint()
-    return _DEDUP_STAGE_MEMO[key]
+        ),
+    )
 
 
 def _shared_link_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -415,15 +237,12 @@ def _shared_link_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared panel incidence (r10): the common-neighbor ranking and the
     Jaccard ranking consume the IDENTICAL ~8M-pair aggregate — one
     wedge expansion + pair count per suite run instead of two."""
-    _memo_scope(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "link_scored")
-    if key not in _DEDUP_STAGE_MEMO:
-        from p2_mapreduce_spark.operators.graph import _panel_wedge_counts
+    from p2_mapreduce_spark.operators.graph import _panel_wedge_counts
 
-        _DEDUP_STAGE_MEMO[key] = _panel_wedge_counts(
-            _shared_link_pairs(spark, sf_dir)
-        ).localCheckpoint()
-    return _DEDUP_STAGE_MEMO[key]
+    return _shared(
+        spark, sf_dir, "link_scored",
+        lambda: _panel_wedge_counts(_shared_link_pairs(spark, sf_dir)),
+    )
 
 
 def _shared_trade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -437,18 +256,16 @@ def _shared_trade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cust, supp); sssp keeps ``w`` (min ship lag).  This is the
     production composition: a graph-analytics pipeline materializes the
     edge dictionary once and fans out every centrality/shape report."""
-    _memo_scope(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "trade_pairs")
-    if key not in _DEDUP_STAGE_MEMO:
-        from p2_mapreduce_spark.operators.graph import trade_pairs
+    from p2_mapreduce_spark.operators.graph import trade_pairs
 
-        pairs = trade_pairs(
+    return _shared(
+        spark, sf_dir, "trade_pairs",
+        lambda: trade_pairs(
             load_table(spark, sf_dir, "lineitem"),
             load_table(spark, sf_dir, "orders"),
             weighted=True,
-        )
-        _DEDUP_STAGE_MEMO[key] = pairs.localCheckpoint()
-    return _DEDUP_STAGE_MEMO[key]
+        ),
+    )
 
 
 def _shared_cosupply_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -458,15 +275,12 @@ def _shared_cosupply_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup — graph.py documents the proof), so the quadratic-in-basket
     pair expansion runs once per suite instead of three times, values
     bit-identical."""
-    _memo_scope(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "cosupply_pairs")
-    if key not in _DEDUP_STAGE_MEMO:
-        from p2_mapreduce_spark.operators.graph import cosupply_pairs
+    from p2_mapreduce_spark.operators.graph import cosupply_pairs
 
-        _DEDUP_STAGE_MEMO[key] = cosupply_pairs(
-            load_table(spark, sf_dir, "lineitem")
-        ).localCheckpoint()
-    return _DEDUP_STAGE_MEMO[key]
+    return _shared(
+        spark, sf_dir, "cosupply_pairs",
+        lambda: cosupply_pairs(load_table(spark, sf_dir, "lineitem")),
+    )
 
 
 def _shared_basket_items(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -474,15 +288,12 @@ def _shared_basket_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     (analytics.basket_items): copurchase / item_cosine / assoc_rules /
     clustering_coeff all open with the identical fact-grain distinct —
     one execution per suite run, values bit-identical."""
-    _memo_scope(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "basket_items")
-    if key not in _DEDUP_STAGE_MEMO:
-        from p2_mapreduce_spark.operators.analytics import basket_items
+    from p2_mapreduce_spark.operators.analytics import basket_items
 
-        _DEDUP_STAGE_MEMO[key] = basket_items(
-            load_table(spark, sf_dir, "lineitem")
-        ).localCheckpoint()
-    return _DEDUP_STAGE_MEMO[key]
+    return _shared(
+        spark, sf_dir, "basket_items",
+        lambda: basket_items(load_table(spark, sf_dir, "lineitem")),
+    )
 
 
 def _q_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1800,7 +1611,7 @@ def _q_media_decode(spark, sf_dir):
     from p2_mapreduce_spark.operators.multimodal import attach_bmp, decode_media
 
     docs = load_table(spark, sf_dir, "documents")
-    return decode_media(_attach_plan(spark, sf_dir, attach_bmp), decoder="real")
+    return decode_media(attach_bmp(docs), decoder="real")
 
 
 def _q_media_digest(spark, sf_dir):
@@ -1815,7 +1626,7 @@ def _q_media_digest(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return decode_media(_attach_plan(spark, sf_dir, attach_binary_mixed), decoder="fake")
+    return decode_media(attach_binary_mixed(docs), decoder="fake")
 
 
 def _q_media_resize(spark, sf_dir):
@@ -1832,7 +1643,7 @@ def _q_media_resize(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    resized = resize_media(_attach_plan(spark, sf_dir, attach_bmp), max_side=8, decoder="pixels")
+    resized = resize_media(attach_bmp(docs), max_side=8, decoder="pixels")
     return pixel_sums(resized)
 
 
@@ -1848,7 +1659,7 @@ def _q_video_frames(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return video_frame_sums(_attach_plan(spark, sf_dir, attach_mjpeg), every_n=2)
+    return video_frame_sums(attach_mjpeg(docs), every_n=2)
 
 
 def _q_video_avi_mjpeg(spark, sf_dir):
@@ -1865,7 +1676,7 @@ def _q_video_avi_mjpeg(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return avi_frame_stats(_attach_plan(spark, sf_dir, attach_avi_mjpeg), every_n=2)
+    return avi_frame_stats(attach_avi_mjpeg(docs), every_n=2)
 
 
 def _q_avi_demux_av(spark, sf_dir):
@@ -1881,7 +1692,7 @@ def _q_avi_demux_av(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return avi_av_stats(_attach_plan(spark, sf_dir, attach_avi_av))
+    return avi_av_stats(attach_avi_av(docs))
 
 
 def _q_video_bmpstream(spark, sf_dir):
@@ -1895,7 +1706,7 @@ def _q_video_bmpstream(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return video_frame_stats(_attach_plan(spark, sf_dir, attach_bmp_video), every_n=2)
+    return video_frame_stats(attach_bmp_video(docs), every_n=2)
 
 
 def _q_audio_wav(spark, sf_dir):
@@ -1904,7 +1715,7 @@ def _q_audio_wav(spark, sf_dir):
     from p2_mapreduce_spark.operators.multimodal import attach_wav, audio_stats
 
     docs = load_table(spark, sf_dir, "documents")
-    return audio_stats(_attach_plan(spark, sf_dir, attach_wav))
+    return audio_stats(attach_wav(docs))
 
 
 def _q_media_pixels(spark, sf_dir):
@@ -1913,7 +1724,7 @@ def _q_media_pixels(spark, sf_dir):
     from p2_mapreduce_spark.operators.multimodal import attach_bmp, pixel_sums
 
     docs = load_table(spark, sf_dir, "documents")
-    return pixel_sums(_attach_plan(spark, sf_dir, attach_bmp))
+    return pixel_sums(attach_bmp(docs))
 
 
 def _q_media_png(spark, sf_dir):
@@ -1926,7 +1737,7 @@ def _q_media_png(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return png_pixel_sums(_attach_plan(spark, sf_dir, attach_png_rgb))
+    return png_pixel_sums(attach_png_rgb(docs))
 
 
 def _q_detector_kappa(spark, sf_dir):
@@ -1972,7 +1783,7 @@ def _q_media_histogram(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return pixel_histogram(_attach_plan(spark, sf_dir, attach_bmp))
+    return pixel_histogram(attach_bmp(docs))
 
 
 def _q_winnow_pairs(spark, sf_dir):
@@ -2138,7 +1949,7 @@ def _q_media_jpeg(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return jpeg_pixel_sums(_attach_plan(spark, sf_dir, attach_jpeg))
+    return jpeg_pixel_sums(attach_jpeg(docs))
 
 
 def _q_media_jpeg420(spark, sf_dir):
@@ -2152,7 +1963,7 @@ def _q_media_jpeg420(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return jpeg_pixel_sums(_attach_plan(spark, sf_dir, attach_jpeg420))
+    return jpeg_pixel_sums(attach_jpeg420(docs))
 
 
 def _q_abc_parts(spark, sf_dir):
@@ -2283,7 +2094,7 @@ def _q_audio_adpcm(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return adpcm_sample_sums(_attach_plan(spark, sf_dir, attach_adpcm))
+    return adpcm_sample_sums(attach_adpcm(docs))
 
 
 def _q_media_jpeg_prog(spark, sf_dir):
@@ -2297,7 +2108,7 @@ def _q_media_jpeg_prog(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return jpeg_pixel_sums(_attach_plan(spark, sf_dir, attach_jpeg_prog))
+    return jpeg_pixel_sums(attach_jpeg_prog(docs))
 
 
 def _q_kruskal_wallis(spark, sf_dir):
@@ -2327,7 +2138,7 @@ def _q_media_tiff(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return tiff_pixel_stats(_attach_plan(spark, sf_dir, attach_tiff))
+    return tiff_pixel_stats(attach_tiff(docs))
 
 
 def _q_risk_ratio(spark, sf_dir):
@@ -2471,7 +2282,7 @@ def _q_media_pgm(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return pgm_pixel_stats(_attach_plan(spark, sf_dir, attach_pgm))
+    return pgm_pixel_stats(attach_pgm(docs))
 
 
 def _q_stump_gini(spark, sf_dir):
@@ -2860,7 +2671,7 @@ def _q_media_jpeg_prog_dri(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return jpeg_pixel_sums(_attach_plan(spark, sf_dir, attach_jpeg_prog_dri))
+    return jpeg_pixel_sums(attach_jpeg_prog_dri(docs))
 
 
 def _q_media_jpeg420_prog(spark, sf_dir):
@@ -2874,7 +2685,7 @@ def _q_media_jpeg420_prog(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return jpeg_pixel_sums(_attach_plan(spark, sf_dir, attach_jpeg420_prog))
+    return jpeg_pixel_sums(attach_jpeg420_prog(docs))
 
 
 def _q_audio_flac(spark, sf_dir):
@@ -2888,7 +2699,7 @@ def _q_audio_flac(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return flac_sample_stats(_attach_plan(spark, sf_dir, attach_flac))
+    return flac_sample_stats(attach_flac(docs))
 
 
 def _q_audio_flac_lpc(spark, sf_dir):
@@ -2903,7 +2714,7 @@ def _q_audio_flac_lpc(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return flac_stereo_stats(_attach_plan(spark, sf_dir, attach_flac_lpc))
+    return flac_stereo_stats(attach_flac_lpc(docs))
 
 
 def _q_audio_mp1(spark, sf_dir):
@@ -2919,7 +2730,7 @@ def _q_audio_mp1(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return mp1_subband_stats(_attach_plan(spark, sf_dir, attach_mp1))
+    return mp1_subband_stats(attach_mp1(docs))
 
 
 def _q_audio_g711(spark, sf_dir):
@@ -2933,7 +2744,7 @@ def _q_audio_g711(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return g711_sample_stats(_attach_plan(spark, sf_dir, attach_g711))
+    return g711_sample_stats(attach_g711(docs))
 
 
 def _q_media_bmp_rle(spark, sf_dir):
@@ -2947,7 +2758,7 @@ def _q_media_bmp_rle(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return bmp_rle_pixel_stats(_attach_plan(spark, sf_dir, attach_bmp_rle))
+    return bmp_rle_pixel_stats(attach_bmp_rle(docs))
 
 
 def _q_ljung_box(spark, sf_dir):
@@ -3020,7 +2831,7 @@ def _q_media_gif(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return gif_pixel_stats(_attach_plan(spark, sf_dir, attach_gif))
+    return gif_pixel_stats(attach_gif(docs))
 
 
 def _q_theta(spark, sf_dir):
@@ -3049,7 +2860,7 @@ def _q_video_y4m(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return y4m_frame_stats(_attach_plan(spark, sf_dir, attach_y4m))
+    return y4m_frame_stats(attach_y4m(docs))
 
 
 def _q_binary_seg(spark, sf_dir):
@@ -3074,7 +2885,7 @@ def _q_media_jpeg_prog_color(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return jpeg_pixel_stats(_attach_plan(spark, sf_dir, attach_jpeg_prog_color))
+    return jpeg_pixel_stats(attach_jpeg_prog_color(docs))
 
 
 def _q_seq_accuracy(spark, sf_dir):
@@ -3345,7 +3156,7 @@ def _q_media_headers(spark, sf_dir):
     from p2_mapreduce_spark.operators.multimodal import attach_png, decode_media
 
     docs = load_table(spark, sf_dir, "documents")
-    return decode_media(_attach_plan(spark, sf_dir, attach_png), decoder="headers").select(
+    return decode_media(attach_png(docs), decoder="headers").select(
         "media_id", "width", "height", "n_frames"
     )
 
@@ -3363,7 +3174,7 @@ def _q_media_mixed(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return decode_media(_attach_plan(spark, sf_dir, attach_real_mixed), decoder="real")
+    return decode_media(attach_real_mixed(docs), decoder="real")
 
 
 def _q_media_frames(spark, sf_dir):
@@ -3379,7 +3190,7 @@ def _q_media_frames(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     return frame_sample(
-        decode_media(_attach_plan(spark, sf_dir, attach_real_mixed), decoder="real"), every_n=2
+        decode_media(attach_real_mixed(docs), decoder="real"), every_n=2
     )
 
 
@@ -3877,7 +3688,7 @@ def _q_phash_near_dup(spark, sf_dir):
     )
 
     return phash_near_pairs(
-        _attach_plan(spark, sf_dir, attach_binary)
+        attach_binary(load_table(spark, sf_dir, "documents"))
     )
 
 
@@ -3887,7 +3698,7 @@ def _q_media_phash(spark, sf_dir):
         media_phash,
     )
 
-    return media_phash(_attach_plan(spark, sf_dir, attach_binary))
+    return media_phash(attach_binary(load_table(spark, sf_dir, "documents")))
 
 
 def _phash_sql() -> str:
@@ -4420,15 +4231,17 @@ def _q_lsh_recall(spark, sf_dir):
 
     from p2_mapreduce_spark.operators.dedup import lsh_recall
 
+    # exact side: the shared AllPairs table sliced to this gate's
+    # threshold — the exact pair set at the gate is the jaccard >= gate
+    # slice of the looser build set (same integers, same IEEE division),
+    # pinned by test_shared_stages
+    assert _ALLPAIRS_BUILD_THRESHOLD <= _LSH_GATE_THRESHOLD
     return lsh_recall(
         load_table(spark, sf_dir, "documents"),
+        threshold=_LSH_GATE_THRESHOLD,
         shingles=_shared_shingles(spark, sf_dir),
-        # exact side: the shared AllPairs table (threshold 0.45) sliced
-        # to this gate's threshold — the exact pair set at 0.5 is the
-        # jaccard >= 0.5 slice of the 0.45 set (same integers, same
-        # IEEE division), pinned by test_shared_stages
         exact_pairs=_shared_allpairs_pairs(spark, sf_dir)
-        .filter(F.col("jaccard") >= 0.5)
+        .filter(F.col("jaccard") >= _LSH_GATE_THRESHOLD)
         .select("doc_a", "doc_b"),
         bands=_shared_minhash_bands(spark, sf_dir),
     )
@@ -4813,18 +4626,16 @@ def _shared_trade_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     link-pairs device): ``two_hop`` surfaces it as-is and
     ``harmonic`` derives H₂ from the same counts — one execution of
     the reach expansion per suite run."""
-    _memo_scope(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "trade_reach")
-    if key not in _DEDUP_STAGE_MEMO:
-        from p2_mapreduce_spark.operators.graph import trade_two_hop
+    from p2_mapreduce_spark.operators.graph import trade_two_hop
 
-        reach = trade_two_hop(
+    return _shared(
+        spark, sf_dir, "trade_reach",
+        lambda: trade_two_hop(
             load_table(spark, sf_dir, "lineitem"),
             load_table(spark, sf_dir, "orders"),
             pairs=_shared_trade_pairs(spark, sf_dir).select("cust", "supp"),
-        )
-        _DEDUP_STAGE_MEMO[key] = reach.localCheckpoint()
-    return _DEDUP_STAGE_MEMO[key]
+        ),
+    )
 
 
 def _q_durbin_watson(spark, sf_dir):
@@ -4955,325 +4766,10 @@ def _q_harmonic(spark, sf_dir):
     return harmonic_from_reach(_shared_trade_reach(spark, sf_dir))
 
 
-#: Query ids that have already appeared in a driver CORRECTNESS_r{N}.json
-#: sample (the union of r01-r08).  The driver verifies the FIRST 50
-#: registered ids each round, so ``queries()`` registers
-#: never-driver-checked ids first — rotating the sample window across the
-#: full suite round over round.  Append each new round's sampled ids here.
-_DRIVER_CHECKED_R01_R08 = frozenset(
-    {
-        # --- sampled in r08 (all 50 green, CORRECTNESS_r08.json) ---
-        'ivf_pq_search', 'ivf_pq_recall', 'jarque_bera', 'levene_bf',
-        'mood_median', 'cochran_armitage', 'partial_corr',
-        'ordinal_assoc', 'ar1_forecast', 'seasonal_strength',
-        'granger_lag1', 'rsi_daily', 'price_osc', 'sprt_daily',
-        'hits_trade', 'hellinger_drift', 'stuart_maxwell',
-        'squared_rank_scale', 'dup_roi', 'staleness_audit',
-        'ansari_bradley', 'wilcoxon_signed', 'page_trend', 'cox_stuart',
-        'dixon_q', 'textrank', 'dup_edge_support', 'media_tiff',
-        'media_pgm', 'stump_gini', 'cronbach_alpha', 'lins_ccc',
-        'bland_altman', 'risk_ratio', 'range_join', 'pq_encode',
-        'pq_search', 'lsh_recall', 'column_churn',
-        'revenue_concentration', 'activity_histogram', 'cuped',
-        'nearest_join', 'hybrid_join', 'did', 'partition_advisor',
-        'seasonal_outliers', 'label_separation', 'ivf_append',
-        'funnel_lag',
-        # --- sampled in r07 ---
-        'ab_quantile_diff', 'acf_lags', 'anova_f', 'audio_flac',
-        'audio_flac_lpc', 'audio_g711', 'audio_mp1', 'bday_lag',
-        'binary_seg', 'burstiness', 'ccf_daily', 'cliffs_delta',
-        'cluster_sample', 'cochran_q', 'cohens_d', 'durbin_watson',
-        'fd_violations', 'fleiss_kappa', 'friedman',
-        'funnel_windowed', 'harmonic', 'hhi', 'index_mapreduce',
-        'interarrival', 'ivm_join', 'kendall_w', 'kruskal_wallis',
-        'link_jaccard', 'link_prediction', 'ljung_box', 'mcnemar',
-        'media_bmp_rle', 'media_gif', 'mrl_recall', 'null_cooccur',
-        'odds_ratio', 'page_hinkley', 'pettitt', 'price_index',
-        'price_volume', 'rbo_ranks', 'readability', 'rfm_segments',
-        'seasonal_mk', 'skipping_audit', 'theta', 'topn_others',
-        'tsb', 'two_hop', 'video_y4m',
-        # --- sampled in r06 ---
-        "media_jpeg_prog_color", "audio_flac", "kruskal_wallis", "anova_f",
-        "ccf_daily", "croston", "rmst", "period_balance",
-        "receivables_aging", "rich_club", "mcc_eval", "label_noise",
-        "ht_estimate", "sentence_stats", "holt_winters", "link_jaccard",
-        "graph_modularity", "chi2_residuals", "hbos_outliers", "rbo_ranks",
-        "xyz_class", "min_cost_supplier", "custdist",
-        "media_jpeg_prog_dri", "media_jpeg420_prog", "link_prediction",
-        "otsu_threshold", "degree_assort", "token_diversity",
-        "part_ancestry", "prorate_pool", "quantile_normalize",
-        "systematic_sample", "kmv_overlap", "merkle_ranges", "twap",
-        "vocab_growth", "wilson_ci", "decayed_engagement",
-        "join_size_estimate", "label_affinity", "theil_sen", "ewma_daily",
-        "audience_overlap", "cms_sketch", "trimmed_mean", "neyman_alloc",
-        "ooo_rate", "assoc_rules", "zipf_buckets",
-        # --- sampled in r05 ---
-        "video_bmpstream", "tvd_drift", "gk_lambda", "runs_test",
-        "spearman_daily", "kendall_tau", "mase_eval", "pinball_eval",
-        "decile_lift", "token_dropout", "blocking_quality",
-        "media_jpeg420", "abc_parts", "holt_linear", "conformal_band",
-        "degree_histogram", "link_prediction", "search_snippets",
-        "fuzzy_search", "kmeans_purity", "average_precision",
-        "isotonic_calibration", "raking_weights", "dup_cluster_sizes",
-        "audio_adpcm", "media_jpeg_prog", "seq_accuracy",
-        "peer_percentile", "brier_score", "video_frames",
-        "media_frames", "media_mixed", "chi2_drift", "k_anonymity",
-        "activity_islands", "knn_ivf", "knn_np", "media_decode",
-        "media_resize", "media_pixels", "media_png", "audio_wav",
-        "weighted_median", "kmv_distinct", "cramers_v", "mad_outliers",
-        # --- sampled in r04 ---
-        "ann_recall", "benford", "bitmap_count", "calibration_bins",
-        "cdc_chunks", "classifier_auc", "clustering_coeff",
-        "daily_envelope", "dedup_containment", "dedup_simhash_idf",
-        "detector_kappa", "distinctive_tokens", "emd_drift", "fold_ci",
-        "gap_interpolate", "gini", "hash_ring", "infer_types",
-        "join_fanout", "knn_embeddings", "knn_lsh", "knn_multiprobe",
-        "ks_drift", "l_diversity", "lang_confusion", "length_batches",
-        "lm_bigram_score", "logrank", "mann_kendall",
-        "markov_attribution", "media_digest", "media_histogram",
-        "media_jpeg", "mixture_plan", "mwu_drift", "negative_pairs",
-        "new_returning", "phrase_search", "ppr_trade",
-        "quality_calibration", "rake_keywords", "rarity_score",
-        "retrieval_eval", "rolling_median", "rolling_median_sketch",
-        "sssp_trade", "substring_search", "t_closeness",
-        "winnow_fingerprints", "winnow_pairs",
-        # --- sampled in r01-r03 ---
-        "above_avg", "agg_pricing", "approx_distinct", "approx_quantiles",
-        "asof_join", "binary_meta", "cube_agg", "date_parts",
-        "dedup_allpairs", "dedup_docs", "dedup_minhash", "dedup_ngram",
-        "dedup_simhash", "distinct_stats", "doc_novelty", "events_tumbling",
-        "except_keys", "feature_hash", "filter_project", "fingerprint_docs",
-        "golden_record", "grep_mapreduce", "groupby_collect", "hash_sample",
-        "intersect_keys", "join_orders_customer", "json_props", "lang_id",
-        "left_join_counts", "outer_join", "partition_count", "pivot_status",
-        "quality_score", "range_join", "record_linkage", "rollup_nation",
-        "salted_agg", "scalar_fns", "scan_lineitem", "semi_anti",
-        "session_window", "sessionize", "shipping_priority",
-        "sliding_window", "sorted_output", "sql_pricing",
-        "supplier_by_nation", "target_encode", "text_stats", "tokenize",
-        "top_bigrams", "topk_window", "udf_roundtrip", "union_parts",
-        "window_analytics", "wordcount", "wordcount_global",
-    }
-)
-
-
-#: Queries added THIS round (never existed when any driver sample ran) —
-#: registered first so the newest, highest-risk operators are always
-#: inside the driver's 50-query window.  ROUND 9 IS A CONSOLIDATION
-#: ROUND (r08 verdict item 1): new+changed ids are capped at ~15 so
-#: ≥35 of the driver's 50 slots go to the 149 ids never externally
-#: sampled through r08.
-_ROUND9_NEW = (
-    # first container video codec: MJPEG-in-AVI (r08 verdict item 4)
-    # + the multiplexed two-stream (MJPEG video + PCM audio) demux
-    "video_avi_mjpeg", "avi_demux_av",
-    # financial/momentum day-grid batch (exact-cent frames)
-    "max_drawdown", "bollinger_bands", "ma_crossover", "obv_daily",
-    "capm_beta",
-    # ordered-alternative rank test (value-grid fold, no pairwise join)
-    "jonckheere",
-    # survival + reliability/agreement completions
-    "nelson_aalen", "icc_reliability", "krippendorff",
-    # directed-graph symmetry audit
-    "reciprocity",
-    # Hilbert-curve layout audit (the other space-filling curve)
-    "hilbert_cluster",
-)
-
-#: Queries whose implementation or oracle materially CHANGED this round
-#: (r04 ADVICE: a prior driver check validated the OLD code, so changed
-#: ids re-enter the sample window exactly like new ids).
-_ROUND9_CHANGED = (
-    # dup_edge_support — naive symmetric wedge self-join replaced by the
-    # degree-ordered orientation (r08 verdict item 2); values identical
-    # (parity pytest + contract re-check green), plan changed
-    "dup_edge_support",
-    # --- optimization round (r09): shared-stage refactors — values
-    # identical (full contract re-sweep green at both scales), plans
-    # changed, so every consumer re-enters the driver sample window ---
-    # trade-graph family now consumes the memoized trade_pairs stage
-    "pagerank_trade", "bfs_trade", "sssp_trade", "ppr_trade",
-    "hits_trade", "degree_assort", "rich_club", "graph_modularity",
-    "degree_histogram", "two_hop", "harmonic",
-    # co-supply family now consumes the memoized distinct pair dictionary
-    "triangle_census", "triangle_doulion", "k_core",
-    # basket family now consumes the memoized basket_items stage
-    "assoc_rules", "copurchase", "item_cosine", "clustering_coeff",
-    # dedup family now consumes the memoized hashed-shingle stage /
-    # the memoized exact truth-pair stage
-    "dedup_ngram", "dedup_allpairs", "dedup_minhash", "lsh_recall",
-    "blocking_quality", "dedup_incremental",
-    # media kernels: per-plane pixel fold rewritten sum(genexpr) ->
-    # sum(map(sum, rows)) (3x faster per plane, bit-identical integer
-    # sums — values re-verified vs oracle)
-    "video_frames", "media_jpeg", "media_jpeg420",
-    "media_jpeg_prog_color", "media_decode", "media_mixed",
-    "media_frames",
-    # markov_attribution — the 12-round join-per-round fixed point
-    # folded into one JVM higher-order aggregate expression (same
-    # bigint arithmetic, value-identical; re-proved vs the unrolled
-    # oracle at both scales), removing all iteration barriers
-    "markov_attribution",
-    # embedding family — spread() added at the corpus-scan sites of
-    # knn_bruteforce / cosine_near_pairs / gram_matrix / pq_encode /
-    # knn_lsh / knn_lsh_multiprobe (the 2000-row embeddings table is
-    # ONE parquet split, so every interpreted-HOF dot product ran on
-    # one core until the first exchange; spread is a no-op at scale).
-    # Values partition-invariant by the operators' exact protocols;
-    # all 12 consumers re-proved hash-identical at both scales
-    "gram_matrix", "knn_embeddings", "knn_lsh", "knn_multiprobe",
-    "ann_recall", "mrl_recall", "embed_near_pairs", "pq_encode",
-    "pq_search", "ivf_pq_search", "ivf_pq_recall", "hybrid_rrf",
-    # simhash_fps shared stage — the md5 fingerprint table is
-    # materialized once and fed to both consumers (values identical;
-    # parity pytest + both-scale oracle re-check green)
-    "dedup_simhash", "blocking_quality",
-    # attach_avi_av now builds payloads once per doc_id residue class
-    # (period lcm(1400, n_frames_max)) and broadcast-joins them back —
-    # bytes identical (differential pytest over multiple periods +
-    # both-scale oracle re-check)
-    "avi_demux_av",
-)
-
-#: --- round-10 (optimization round 2): every id whose PLAN or KERNEL
-#: changed this round re-enters the driver sample window; values proved
-#: identical (full contract sweeps at both scales, see
-#: OPTIMIZATION_r10.md) ---
-_ROUND10_CHANGED = (
-    # ADVICE hardening: NULL-doc_id residue guard (plan gains the
-    # zero-row sequential branch) / try_element_at markov fold
-    "avi_demux_av", "markov_attribution",
-    # SimHash/MinHash single-expression builders (same Catalyst plan,
-    # ~300-400 py4j trips -> ~3 per call) + DHT-memo eviction (JPEG
-    # kernel-internal, bit-identical)
-    "dedup_minhash", "dedup_incremental", "lsh_recall", "dedup_simhash",
-    "dedup_simhash_idf", "blocking_quality",
-    "media_jpeg", "media_jpeg420", "media_jpeg420_prog",
-    "media_jpeg_prog", "media_jpeg_prog_color", "media_jpeg_prog_dri",
-    "media_mixed", "media_decode", "media_frames", "video_avi_mjpeg",
-    # containment miner + novelty attribution now consume the shared
-    # hashed-shingle stage (plan: explode subtree -> checkpoint scan)
-    "dedup_containment", "doc_novelty",
-    # dedup_allpairs IS the family's shared AllPairs stage; lsh_recall's
-    # exact side reads its jaccard>=0.5 slice and its approximate side
-    # consumes the shared MinHash band table
-    "dedup_allpairs",
-    # SimHash vote regroup to distinct (doc, token) grain — same exact
-    # BIGINT sums (brute-force twin pytest), pair-grain join/aggregate
-    # inputs instead of the occurrence stream
-    # (dedup_simhash / dedup_simhash_idf / blocking_quality already
-    # listed above)
-    # winnow_fingerprints IS the MOSS family's shared selection stage;
-    # winnow_pairs self-joins its distinct (doc_id, fp) projection
-    "winnow_fingerprints", "winnow_pairs",
-    # the two link-prediction rankings consume ONE memoized wedge-count
-    # stage over the shared panel incidence
-    "link_prediction", "link_jaccard",
-    # the ngram truth-pair memo now derives from the shared UNFILTERED
-    # shingle_pairs table (dedup_containment reads the same table with
-    # its own predicate — both listed above / here)
-    "dedup_ngram",
-    # dense-census bitset assembly rewritten to native bit_or
-    # aggregates (values pinned identical; plan changed)
-    "triangle_census",
-)
-
-#: --- round-8 history (all 34 new + 3 changed ids were sampled in the
-#: r08 driver window and are now in _DRIVER_CHECKED_R01_R08) ---
-_ROUND8_NEW = (
-    # IVF-PQ composed retrieval + its recall acceptance gate (r07
-    # verdict missing #3 / next-round item 4)
-    "ivf_pq_search", "ivf_pq_recall",
-    # round-8 stats-test batch (distribution shape / scale / location /
-    # trend / partialled and ordinal association)
-    "jarque_bera", "levene_bf", "mood_median", "cochran_armitage",
-    "partial_corr", "ordinal_assoc",
-    # round-8 time-series batch (autoregression, seasonal score, lead
-    # tests, momentum indicators, sequential monitoring)
-    "ar1_forecast", "seasonal_strength", "granger_lag1", "rsi_daily",
-    "price_osc", "sprt_daily",
-    # round-8 graph / drift / dedup-ops batch
-    "hits_trade", "hellinger_drift", "stuart_maxwell",
-    "squared_rank_scale", "dup_roi", "staleness_audit",
-    # round-8 rank/trend/outlier completion batch
-    "ansari_bradley", "wilcoxon_signed", "page_trend", "cox_stuart",
-    "dixon_q",
-    # round-8 graph-composition batch
-    "textrank", "dup_edge_support",
-    # round-8 media plane: 4th/5th still formats (tag-directory TIFF,
-    # ASCII-grammar PGM) + the ML-prep feature screen
-    "media_tiff", "media_pgm", "stump_gini",
-    # round-8 reliability / method-comparison batch
-    "cronbach_alpha", "lins_ccc", "bland_altman",
-    # round-8 epidemiology-trio completion
-    "risk_ratio",
-)
-
-_ROUND8_CHANGED = (
-    # range_join — BNLJ replaced by the docstring'd bucketized-band
-    # equi-join (r07 verdict weak #2 / next-round item 3)
-    "range_join",
-    # pq_encode / pq_search — sub-codebook construction extracted into
-    # the shared _pq_codebook helper (same plan, but the code moved, so
-    # they re-enter the window; both were never-sampled anyway)
-    "pq_encode", "pq_search",
-)
-
-#: --- round-7 history (all 28 new + 8 changed ids were sampled in the
-#: r07 driver window and are now in _DRIVER_CHECKED_R01_R08) ---
-_ROUND7_NEW = (
-    "audio_flac_lpc", "audio_mp1", "audio_g711", "media_bmp_rle",
-    "media_gif",
-    "durbin_watson", "pettitt", "tsb", "page_hinkley", "friedman",
-    "hhi", "kendall_w", "bday_lag", "cliffs_delta", "null_cooccur",
-    "cohens_d", "mcnemar", "odds_ratio", "burstiness", "harmonic",
-    "ljung_box", "seasonal_mk", "cochran_q", "price_index",
-    "theta", "fleiss_kappa", "video_y4m", "binary_seg",
-)
-
-#: Queries whose implementation or oracle materially CHANGED this round
-#: (r04 ADVICE: a prior driver check validated the OLD code, so changed
-#: ids re-enter the sample window exactly like new ids):
-#:   two_hop — absolute hash-ranked top-K node panel replaces the
-#:     fractional node%100 sample (r06 verdict weak #1, the
-#:     link_prediction fix applied), now answered from the memoized
-#:     shared reach stage;
-#:   link_prediction / link_jaccard — both consume the memoized shared
-#:     (s, c) incidence stage (r06 verdict item 5);
-#:   kruskal_wallis / anova_f / ccf_daily / rbo_ranks — empty-input /
-#:     single-group guards (r06 ADVICE);
-#:   audio_flac — the shared _decode_flac grew LPC + stereo
-#:     decorrelation; the fixed-subset query re-validates the decoder.
-_ROUND7_CHANGED = (
-    "two_hop", "link_prediction", "link_jaccard", "kruskal_wallis",
-    "anova_f", "ccf_daily", "rbo_ranks", "audio_flac",
-)
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    base = _queries_base()
-    for _n in _PLAN_PURE_IDS:
-        if _n in base:
-            base[_n] = _plan_memoized(_n, base[_n])
-    newest = {
-        k: base[k]
-        for k in (*_ROUND10_CHANGED, *_ROUND9_NEW, *_ROUND9_CHANGED)
-        if k in base
-    }
-    fresh = {
-        k: v
-        for k, v in base.items()
-        if k not in _DRIVER_CHECKED_R01_R08 and k not in newest
-    }
-    seen = {
-        k: v
-        for k, v in base.items()
-        if k in _DRIVER_CHECKED_R01_R08 and k not in newest
-    }
-    return {**newest, **fresh, **seen}
-
-
-def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every implemented query id mapped to its (spark, sf_dir) ->
+    DataFrame builder.  Ids carry no order: callers look them up by
+    name or sort them."""
     return {
         "wordcount": _q_wordcount,
         "wordcount_global": _q_wordcount_global,

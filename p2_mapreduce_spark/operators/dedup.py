@@ -175,42 +175,18 @@ def hashed_shingles(
     )
 
 
-def _minhash_aggs(num_hashes: int) -> list[Column]:
-    """The seeded hash family over the pre-hashed shingle column ``h``:
-    mh_i = min over shingles of xxhash64(h, i) — xxhash64 with the seed
-    index appended as an extra column is an independent-enough family and
-    stays inside whole-stage codegen."""
-    return [
-        F.min(F.xxhash64(F.col("h"), F.lit(i))).alias(f"mh{i}")
-        for i in range(num_hashes)
-    ]
-
-
-def _band_hash_array(num_bands: int, rows_per_band: int) -> Column:
-    """array<long>[num_bands]: one xxhash64 per band over its signature
-    rows — the LSH bucket keys (shared by the self-join and incremental
-    paths; the band hash IS the index format, so both must agree).
-
-    Column-composed form, kept as the independent twin the shared-stage
-    parity pytest builds by hand; production paths use the
-    single-expression variants below (same values, ~1 py4j round trip
-    instead of ~100)."""
-    return F.array(*[
-        F.xxhash64(*[
-            F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)
-        ])
-        for b in range(num_bands)
-    ])
-
-
 def _minhash_sig_array(num_hashes: int) -> Column:
-    """Single-expression twin of :func:`_minhash_aggs`: ONE
-    array-of-aggregates Column — Catalyst still plans ``num_hashes``
-    separate partial-aggregating ``min`` functions; the array is
-    assembled in the result projection.  The seed literal is an INT in
-    both forms, so every xxhash64 input is type-identical and the
-    signature values are bit-for-bit the old ones (r10: the 64 composed
-    Columns were ~0.3 s of driver-side py4j construction per call)."""
+    """The MinHash signature over the pre-hashed shingle column ``h``:
+    mh[i] = min over shingles of xxhash64(h, i) — xxhash64 with the seed
+    index appended as an extra column is an independent-enough family
+    and stays inside whole-stage codegen.  ONE array-of-aggregates
+    Column: Catalyst still plans ``num_hashes`` separate
+    partial-aggregating ``min`` functions; the array is assembled in the
+    result projection (r10: 64 composed Columns were ~0.3 s of
+    driver-side py4j construction per call).  Single-expression twin of
+    ``_minhash_aggs`` in tests/test_shared_stages.py, the hand-built
+    reference: the seed literal is an INT in both forms, so every
+    xxhash64 input is type-identical and the values bit-for-bit equal."""
     return F.expr(
         "array(" + ",".join(
             f"min(xxhash64(h, {i}))" for i in range(num_hashes)
@@ -221,9 +197,13 @@ def _minhash_sig_array(num_hashes: int) -> Column:
 def _band_hash_from_sig(
     num_bands: int, rows_per_band: int, sig_col: str = "mh"
 ) -> Column:
-    """Single-expression twin of :func:`_band_hash_array` over the array
-    signature column: band b hashes signature slots [b·rpb, (b+1)·rpb)
-    in the same order with the same bigint element types."""
+    """array<long>[num_bands]: one xxhash64 per band over its signature
+    slots — the LSH bucket keys (shared by the self-join and incremental
+    paths; the band hash IS the index format, so both must agree).  Band
+    b hashes slots [b·rpb, (b+1)·rpb) of the array signature column.
+    Single-expression twin of ``_band_hash_array`` in
+    tests/test_shared_stages.py: same slot order, same bigint element
+    types."""
     return F.expr(
         "array(" + ",".join(
             "xxhash64(" + ",".join(

@@ -111,11 +111,12 @@ def spread(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
 #: DataFrame memo per (application, sf_dir, table).  A DataFrame is an
 #: immutable logical plan; rebuilding it per query re-runs file listing
 #: and parquet footer/schema reads (InMemoryFileIndex construction —
-#: measured ~40-120 ms per call on local[32]).  Reusing the object also
-#: guarantees plan-fragment equality, so a ``df.persist()`` by one
-#: caller (bench.py's base-table cache) is picked up by every later
-#: query over the same table.  The testdata dirs are immutable, so the
-#: memo can never serve stale listings; it is evicted per application.
+#: measured ~40-120 ms per call on local[32]), and one query or test
+#: typically loads the same table several times.  Reusing the object
+#: also guarantees plan-fragment equality, so a ``df.persist()`` by one
+#: caller is picked up by every later query over the same table.  The
+#: testdata dirs are immutable, so the memo can never serve stale
+#: listings; it is evicted per application.
 _TABLE_MEMO: dict = {}
 
 

@@ -1,8 +1,9 @@
 """Driver mimic: import __spark_entry__ as the driver does and exercise the
 full contract at sf0.01 (the driver's t2 scale)."""
 import sys, os, json
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as E
+print("contract:", E.__file__)
 import duckdb
 from pyspark.sql import SparkSession
 

@@ -10,6 +10,7 @@ drift silently)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from p2_mapreduce_spark.session import load_table
@@ -19,6 +20,34 @@ SF = "/root/testdata/sf0.001"
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
+
+
+def _minhash_aggs(num_hashes: int) -> list[Column]:
+    """The seeded hash family over the pre-hashed shingle column ``h``:
+    mh_i = min over shingles of xxhash64(h, i) — xxhash64 with the seed
+    index appended as an extra column is an independent-enough family and
+    stays inside whole-stage codegen."""
+    return [
+        F.min(F.xxhash64(F.col("h"), F.lit(i))).alias(f"mh{i}")
+        for i in range(num_hashes)
+    ]
+
+
+def _band_hash_array(num_bands: int, rows_per_band: int) -> Column:
+    """array<long>[num_bands]: one xxhash64 per band over its signature
+    rows — the LSH bucket keys (shared by the self-join and incremental
+    paths; the band hash IS the index format, so both must agree).
+
+    Column-composed form, kept as the independent twin the shared-stage
+    parity tests build by hand; production paths use the
+    single-expression variants in operators/dedup.py (same values, ~1
+    py4j round trip instead of ~100)."""
+    return F.array(*[
+        F.xxhash64(*[
+            F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)
+        ])
+        for b in range(num_bands)
+    ])
 
 
 @pytest.fixture(scope="module")
@@ -84,8 +113,6 @@ def test_shingle_and_band_feeds_equal_solo(spark):
     from p2_mapreduce_spark.operators.dedup import (
         NUM_BANDS,
         NUM_HASHES,
-        _band_hash_array,
-        _minhash_aggs,
         hashed_shingles,
         minhash_lsh_pairs,
         ngram_jaccard_pairs,
@@ -160,8 +187,6 @@ def test_lsh_recall_fed_sides_equal_solo(spark):
     from p2_mapreduce_spark.operators.dedup import (
         NUM_BANDS,
         NUM_HASHES,
-        _band_hash_array,
-        _minhash_aggs,
         allpairs_jaccard,
         hashed_shingles,
         lsh_recall,
@@ -235,8 +260,6 @@ def test_incremental_side_slices_equal_rebuild(spark):
     from p2_mapreduce_spark.operators.dedup import (
         NUM_BANDS,
         NUM_HASHES,
-        _band_hash_array,
-        _minhash_aggs,
         hashed_shingles,
         minhash_lsh_incremental,
     )
@@ -290,3 +313,34 @@ def test_simhash_fingerprint_feed_equals_solo_derivation(spark):
     assert _rows(blocking_quality(docs)) == _rows(
         blocking_quality(docs, fingerprints=pre)
     )
+
+
+def test_shared_helper_memoizes_one_scope(spark):
+    """The entry file's ``_shared`` builds a stage once per (application,
+    sf_dir, name), and a call under another sf_dir drops the old scope."""
+    import __spark_entry__ as entry_mod
+
+    memo = entry_mod._SHARED_STAGES
+    saved = dict(memo)
+    calls = []
+
+    def build():
+        calls.append(1)
+        return spark.range(3)
+
+    try:
+        first = entry_mod._shared(spark, "/scope-a", "t", build)
+        assert entry_mod._shared(spark, "/scope-a", "t", build) is first
+        assert len(calls) == 1
+        # another name in the same scope neither evicts nor rebuilds "t"
+        entry_mod._shared(spark, "/scope-a", "u", build)
+        assert entry_mod._shared(spark, "/scope-a", "t", build) is first
+        assert len(calls) == 2
+        # another sf_dir evicts every entry of the first scope
+        entry_mod._shared(spark, "/scope-b", "t", build)
+        assert {k[1:] for k in memo} == {("/scope-b", "t")}
+        assert entry_mod._shared(spark, "/scope-a", "t", build) is not first
+        assert len(calls) == 4
+    finally:
+        memo.clear()
+        memo.update(saved)
