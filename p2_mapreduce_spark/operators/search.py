@@ -415,18 +415,16 @@ def hybrid_search(
     two ≤``n_candidates``-row lists.  No stage touches corpus-scale
     data more than the retrievers already do.
     """
-    from p2_mapreduce_spark.operators.similarity import knn_bruteforce
+    from p2_mapreduce_spark.operators.similarity import knn_exact
 
     sparse = bm25_search(docs, terms, top_n=n_candidates).select(
         "doc_id", F.row_number().over(
             Window.orderBy(F.col("score").desc(), F.col("doc_id"))
         ).cast("bigint").alias("rnk")
     )
-    dense = (
-        knn_bruteforce(embeddings, n_queries=query_vec_id + 1, k=n_candidates)
-        .filter(F.col("q_id") == query_vec_id)
-        .select(F.col("n_id").alias("doc_id"), F.col("rnk"))
-    )
+    dense = knn_exact(
+        embeddings, embeddings.filter(F.col("vec_id") == query_vec_id), n_candidates
+    ).select(F.col("n_id").alias("doc_id"), F.col("rnk"))
     return rrf_fuse(sparse, dense, k_rrf=k_rrf, top_n=top_n)
 
 

@@ -1,21 +1,35 @@
 """Similarity search over embedding columns (extension surface).
 
-Two paths, mirroring production ANN practice:
+The kNN family is one scoring core with interchangeable candidate
+generators, built from private blocks that are each written once:
+``_queries`` (the broadcast ``(q_id, q_vec, q_norm)`` block), ``_top_k``
+(the per-query rank: score, then neighbour id — total, reproducible),
+``_exact_top_k`` (the query block broadcast against the corpus on a
+candidate predicate, self excluded, exact cosine, ``_top_k``),
+``_nearest_cells`` (the IVF coarse probe), ``_adc_top_k`` (PQ
+asymmetric distances looked up in a per-query table, ranked) and
+``_recall_at_k`` (an approximate top-k judged against the exact one).
 
-- :func:`knn_bruteforce` — exact top-k cosine: broadcast the (small) query
-  set against the corpus, fold the dot product with built-in higher-order
-  functions (``zip_with`` / ``aggregate`` — JVM, codegen, no Python), rank
-  with one window.  Cost O(|corpus| × |queries| × dim): the correct
-  baseline and the verifier for approximate paths.  Scales horizontally —
-  the corpus side never shuffles.
-- :func:`knn_lsh` — random-hyperplane LSH: bucket each vector by the sign
-  pattern of ``n_planes`` fixed pseudo-random hyperplanes (derived from a
-  seeded hash, no RNG state), then search only the query's bucket.
-  Sub-linear probe cost at the price of recall; candidates are re-scored
-  exactly, so precision is exact.
+- :func:`knn_exact` (any query DataFrame) and :func:`knn_bruteforce`
+  (queries ``vec_id < n_queries``): ``_exact_top_k`` with no predicate —
+  the baseline and the verifier of every approximate path.
+  :func:`knn_bruteforce_np` is its numpy-matmul twin, ranked by ``_top_k``.
+- :func:`knn_lsh` / :func:`knn_lsh_multiprobe`: ``_lsh_top_k``, that is
+  ``_exact_top_k`` on "same hyperplane bucket" for the query's own
+  bucket, or also for its one-bit flips.
+- :func:`knn_ivf` / :func:`probe_ivf`: ``_nearest_cells``, then
+  ``_exact_top_k`` on "member of a probed cell".
+- :func:`pq_search` / :func:`ivf_pq_search`: ``_adc_top_k`` over every
+  code, or over the probed cells' codes.
+- :func:`ann_recall`, :func:`ivf_pq_recall`, :func:`mrl_recall`:
+  ``_recall_at_k`` of LSH, IVF-PQ and truncated-vector kNN against
+  :func:`knn_bruteforce`.
 
-Dot products accumulate left-to-right in DOUBLE (``F.aggregate`` fold) —
-deterministic for a fixed element order, which embeddings have.
+Candidates are always re-scored exactly, so approximate paths lose
+recall, never precision.  Dot products accumulate left-to-right in
+DOUBLE (``F.aggregate`` fold, JVM codegen, no Python) — deterministic
+for a fixed element order, which embeddings have.  A cosine with a
+zero-norm side is NULL and ranks after every real cosine.
 """
 
 from __future__ import annotations
@@ -43,6 +57,72 @@ def with_norm(embeddings: DataFrame, vec_col: str = "embedding") -> DataFrame:
     return embeddings.withColumn("norm", _norm(F.col(vec_col)))
 
 
+# --- the kNN core ------------------------------------------------------------
+
+
+def _cosine(a: Column, a_norm: Column, b: Column, b_norm: Column) -> Column:
+    """Sequential-fold cosine.  A zero-norm side gives NULL rather than
+    failing the job (ANSI DIVIDE_BY_ZERO); every other cosine is the same
+    IEEE division."""
+    return F.try_divide(_dot(a, b), a_norm * b_norm)
+
+
+def _queries(rows: DataFrame, vec_col: str, id_col: str, *extra: Column) -> DataFrame:
+    """The query block ``(q_id, q_vec, q_norm, *extra)`` of ``rows``."""
+    return rows.select(
+        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"),
+        _norm(F.col(vec_col)).alias("q_norm"), *extra,
+    )
+
+
+def _top_k(scored: DataFrame, k: int, order: Column, tie: str = "n_id") -> DataFrame:
+    """Each query's first ``k`` rows of ``scored`` by ``order`` then
+    ``tie`` (a total order, so ranks are reproducible), with their bigint
+    ``rnk`` appended."""
+    w = Window.partitionBy("q_id").orderBy(order, F.col(tie))
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select(*scored.columns, F.col("rnk").cast("bigint").alias("rnk"))
+    )
+
+
+def _exact_top_k(
+    corpus: DataFrame, queries: DataFrame, k: int, vec_col: str, id_col: str,
+    on: Column | None = None,
+) -> DataFrame:
+    """Exact cosine top-k ``(q_id, n_id, cosine, rnk)``: the ``corpus``
+    rows (with ``norm``) that meet ``on``, self excluded, scored against
+    the broadcast query block.  The corpus side never shuffles."""
+    pair = F.col(id_col) != F.col("q_id")
+    scored = corpus.join(F.broadcast(queries), pair if on is None else on & pair).select(
+        "q_id",
+        F.col(id_col).alias("n_id"),
+        _cosine(F.col("q_vec"), F.col("q_norm"), F.col(vec_col), F.col("norm")).alias("cosine"),
+    )
+    return _top_k(scored, k, F.col("cosine").desc())
+
+
+def knn_exact(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    k: int = 10,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """Exact top-k cosine neighbours in ``embeddings`` of each row of
+    ``queries`` (any subset of the embedding rows), self excluded:
+    ``(q_id, n_id, cosine, rnk)``, ties broken by neighbour id.  The
+    query block is broadcast against the corpus and each dot product
+    folds with built-in higher-order functions (``zip_with`` /
+    ``aggregate``).  Cost O(|corpus| × |queries| × dim); the corpus side
+    never shuffles, so it scales horizontally."""
+    # spread(): corpus-side dots run in the scan stage (guide §2 —
+    # one parquet split at test scale would serialize them on one core)
+    corpus = with_norm(spread(embeddings), vec_col)
+    return _exact_top_k(corpus, _queries(queries, vec_col, id_col), k, vec_col, id_col)
+
+
 def knn_bruteforce(
     embeddings: DataFrame,
     n_queries: int = 5,
@@ -50,26 +130,10 @@ def knn_bruteforce(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for the first ``n_queries`` vectors
-    (deterministic query set: ``vec_id < n_queries``), self excluded.
-    Ties broken by neighbor id, so ranks are total and reproducible."""
-    # spread(): corpus-side dots run in the scan stage (guide §2 —
-    # one parquet split at test scale would serialize them on one core)
-    corpus = with_norm(spread(embeddings), vec_col).select(
-        F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"), F.col("norm").alias("n_norm")
-    )
-    queries = with_norm(embeddings.filter(F.col(id_col) < n_queries), vec_col).select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"), F.col("norm").alias("q_norm")
-    )
-    scored = (
-        corpus.join(F.broadcast(queries), F.col("n_id") != F.col("q_id"))
-        .withColumn("cosine", _dot(F.col("q_vec"), F.col("n_vec")) / (F.col("q_norm") * F.col("n_norm")))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("q_id", "n_id", "cosine", F.col("rnk").cast("bigint").alias("rnk"))
+    """:func:`knn_exact` for the first ``n_queries`` vectors
+    (deterministic query set: ``vec_id < n_queries``)."""
+    return knn_exact(
+        embeddings, embeddings.filter(F.col(id_col) < n_queries), k, vec_col, id_col
     )
 
 
@@ -165,41 +229,35 @@ def knn_bruteforce_np(
         .select(F.col(id_col).alias("q_id"), vec_col)
         .collect()
     )
-    q_ids = np.array([r["q_id"] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[vec_col] for r in q_rows], dtype=np.float64)
-    q_norm = np.linalg.norm(q_mat, axis=1)
+    schema = "q_id long, n_id long, cosine double"
+    if not q_rows:  # no query block to broadcast: nothing to score
+        scored = embeddings.sparkSession.createDataFrame([], schema)
+    else:
+        q_ids = np.array([r["q_id"] for r in q_rows], dtype=np.int64)
+        q_mat = np.array([r[vec_col] for r in q_rows], dtype=np.float64)
+        q_norm = np.linalg.norm(q_mat, axis=1)
 
-    def score(batches):
-        for pdf in batches:
-            n_mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            n_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            n_norm = np.linalg.norm(n_mat, axis=1)
-            cos = (n_mat @ q_mat.T) / np.outer(n_norm, q_norm)
-            n_rep = np.repeat(n_ids, len(q_ids))
-            q_rep = np.tile(q_ids, len(n_ids))
-            yield pd.DataFrame(
-                {"q_id": q_rep, "n_id": n_rep, "cosine": cos.ravel()}
-            )[q_rep != n_rep]
+        def score(batches):
+            for pdf in batches:
+                n_mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+                n_ids = pdf[id_col].to_numpy(dtype=np.int64)
+                n_norm = np.linalg.norm(n_mat, axis=1)
+                cos = (n_mat @ q_mat.T) / np.outer(n_norm, q_norm)
+                n_rep = np.repeat(n_ids, len(q_ids))
+                q_rep = np.tile(q_ids, len(n_ids))
+                yield pd.DataFrame(
+                    {"q_id": q_rep, "n_id": n_rep, "cosine": cos.ravel()}
+                )[q_rep != n_rep]
 
-    scored = embeddings.select(id_col, vec_col).mapInPandas(
-        score, schema="q_id long, n_id long, cosine double"
-    )
+        scored = embeddings.select(id_col, vec_col).mapInPandas(score, schema=schema)
     if quantize is not None:
-        scored = scored.withColumn(
-            "cos_q", F.floor(F.col("cosine") * F.lit(float(quantize))).cast("bigint")
+        scored = scored.select(
+            "q_id",
+            "n_id",
+            F.floor(F.col("cosine") * F.lit(float(quantize))).cast("bigint").alias("cos_q"),
         )
-        w = Window.partitionBy("q_id").orderBy(F.col("cos_q").desc(), F.col("n_id"))
-        return (
-            scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("q_id", "n_id", "cos_q", F.col("rnk").cast("bigint").alias("rnk"))
-        )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("q_id", "n_id", "cosine", F.col("rnk").cast("bigint").alias("rnk"))
-    )
+        return _top_k(scored, k, F.col("cos_q").desc())
+    return _top_k(scored, k, F.col("cosine").desc())
 
 
 def build_ivf_cells(
@@ -239,7 +297,7 @@ def _assign_cells(emb_n: DataFrame, cents: DataFrame, vec_col: str, id_col: str)
     """argmax-cosine assignment of each vector to a centroid: broadcast
     cross-score + per-vector top-1 window.  One pass over the corpus."""
     scored = emb_n.crossJoin(F.broadcast(cents)).withColumn(
-        "c_sim", _dot(F.col(vec_col), F.col("c_vec")) / (F.col("norm") * F.col("c_norm"))
+        "c_sim", _cosine(F.col(vec_col), F.col("norm"), F.col("c_vec"), F.col("c_norm"))
     )
     w = Window.partitionBy(id_col).orderBy(F.col("c_sim").desc(), "cell")
     return (
@@ -317,10 +375,19 @@ def knn_ivf(
     assignment table is written bucketed by cell so a probe is a
     partition-pruned scan, not a shuffle."""
     cents, assign = build_ivf_cells(embeddings, n_cells, vec_col, id_col)
-    queries = with_norm(embeddings.filter(F.col(id_col) < n_queries), vec_col).select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"), F.col("norm").alias("q_norm")
-    )
+    queries = _queries(embeddings.filter(F.col(id_col) < n_queries), vec_col, id_col)
     return probe_ivf(cents, assign, queries, k, nprobe, vec_col, id_col)
+
+
+def _nearest_cells(queries: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
+    """The IVF coarse probe: each query's ``nprobe`` nearest centroids by
+    cosine, ties to the lower cell, as ``(q_id, q_vec, q_norm, probe)``.
+    n_queries × n_cells rows, centroids broadcast."""
+    sims = queries.crossJoin(F.broadcast(cents)).select(
+        "q_id", "q_vec", "q_norm", F.col("cell").alias("probe"),
+        _cosine(F.col("q_vec"), F.col("q_norm"), F.col("c_vec"), F.col("c_norm")).alias("c_sim"),
+    )
+    return _top_k(sims, nprobe, F.col("c_sim").desc(), tie="probe").drop("c_sim", "rnk")
 
 
 def probe_ivf(
@@ -342,33 +409,11 @@ def probe_ivf(
     on-disk index (save_ivf_index) is read with partition pruning — only
     the probed cells' files are touched.  Leave False for large batch
     query sets where most cells get probed anyway."""
-    q_cells = queries.crossJoin(F.broadcast(cents)).withColumn(
-        "c_sim", _dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm"))
-    )
-    wq = Window.partitionBy("q_id").orderBy(F.col("c_sim").desc(), "cell")
-    probes = (
-        q_cells.withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= nprobe)
-        .select("q_id", "q_vec", "q_norm", "cell")
-    )
+    probes = _nearest_cells(queries, cents, nprobe)
     if prune_cells:
-        cells = [r["cell"] for r in probes.select("cell").distinct().collect()]
+        cells = [r["probe"] for r in probes.select("probe").distinct().collect()]
         assign = assign.filter(F.col("cell").isin(cells))
-    corpus = assign.select(
-        F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"),
-        F.col("norm").alias("n_norm"), "cell",
-    )
-    scored = corpus.join(
-        F.broadcast(probes), ["cell"]
-    ).filter(F.col("n_id") != F.col("q_id")).withColumn(
-        "cosine", _dot(F.col("q_vec"), F.col("n_vec")) / (F.col("q_norm") * F.col("n_norm"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("q_id", "n_id", "cosine", F.col("rnk").cast("bigint").alias("rnk"))
-    )
+    return _exact_top_k(assign, probes, k, vec_col, id_col, F.col("cell") == F.col("probe"))
 
 
 def save_ivf_index(cents: DataFrame, assign: DataFrame, root: str) -> None:
@@ -463,6 +508,32 @@ def embedding_centroid(
     )
 
 
+def _lsh_top_k(
+    embeddings: DataFrame, n_queries: int, k: int, n_planes: int,
+    vec_col: str, id_col: str, masks: list[int],
+) -> DataFrame:
+    """Random-hyperplane LSH top-k: every vector carries the sign pattern
+    of ``n_planes`` seeded hyperplanes as its bucket
+    (:func:`add_lsh_bucket`), and each query is re-scored exactly against
+    the buckets ``query bucket XOR mask`` for each of ``masks``.
+
+    The query side explodes into its probe set (``len(masks)`` rows per
+    query — config-sized, still broadcast), so the plan stays an
+    equi-join instead of a non-equi bucket-neighbourhood predicate.
+    Distinct masks give distinct probes, so no candidate dedup is
+    needed."""
+    # spread(): norms + n_planes sign dots per corpus row run pre-exchange
+    bucketed = add_lsh_bucket(with_norm(spread(embeddings), vec_col), n_planes, vec_col)
+    probes = F.array(*[F.col("bucket").bitwiseXOR(F.lit(m)) for m in masks])
+    queries = _queries(
+        bucketed.filter(F.col(id_col) < n_queries), vec_col, id_col,
+        F.explode(probes).alias("probe"),
+    )
+    return _exact_top_k(
+        bucketed, queries, k, vec_col, id_col, F.col("bucket") == F.col("probe")
+    )
+
+
 def knn_lsh(
     embeddings: DataFrame,
     n_queries: int = 5,
@@ -472,30 +543,10 @@ def knn_lsh(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Approximate top-k: exact re-scoring restricted to the query's LSH
-    bucket.  Recall < 1 by construction; rows-only in the driver check,
-    recall measured against :func:`knn_bruteforce` in pytest."""
-    bucketed = add_lsh_bucket(with_norm(spread(embeddings), vec_col), n_planes, vec_col)
-    corpus = bucketed.select(
-        F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"),
-        F.col("norm").alias("n_norm"), F.col("bucket").alias("n_bucket"),
-    )
-    queries = bucketed.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"),
-        F.col("norm").alias("q_norm"), F.col("bucket").alias("q_bucket"),
-    )
-    scored = (
-        corpus.join(
-            F.broadcast(queries),
-            (F.col("n_bucket") == F.col("q_bucket")) & (F.col("n_id") != F.col("q_id")),
-        )
-        .withColumn("cosine", _dot(F.col("q_vec"), F.col("n_vec")) / (F.col("q_norm") * F.col("n_norm")))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("q_id", "n_id", "cosine", F.col("rnk").cast("bigint").alias("rnk"))
-    )
+    bucket.  Sub-linear probe cost at the price of recall; rows-only in
+    the driver check, recall measured against :func:`knn_bruteforce` in
+    pytest."""
+    return _lsh_top_k(embeddings, n_queries, k, n_planes, vec_col, id_col, [0])
 
 
 def gram_matrix(
@@ -615,8 +666,22 @@ def semantic_dedup(
     )
 
 
+def _subspace(vec: Column, m: int) -> Column:
+    """Slice ``s`` of ``vec`` cut into ``m`` equal subspaces.  The width
+    ``size(vec) div m`` is derived per row, so any vector length works."""
+    width = F.call_function("div", F.size(vec), F.lit(m)).cast("int")
+    return F.slice(vec, F.col("s") * width + 1, width)
+
+
+def _sq_dist(x: Column) -> Column:
+    """Squared L2 distance from subvector ``x`` to the codebook row's
+    ``cv`` in the pinned tree ``(x·x − 2·x·cv) + cc`` — sequential-fold
+    dots, so the value is bit-identical cross-engine."""
+    return (_dot(x, x) - F.lit(2.0) * _dot(x, F.col("cv"))) + F.col("cc")
+
+
 def _pq_codebook(
-    emb: DataFrame, m: int, k: int, sub: int, vec_col: str, id_col: str
+    emb: DataFrame, m: int, k: int, vec_col: str, id_col: str
 ) -> DataFrame:
     """The shared PQ sub-codebook ``(s, cell, cv, cc)``: sub-codebook c
     of subspace s = the s-th slice of the md5-seeded sample's c-th
@@ -639,13 +704,7 @@ def _pq_codebook(
     )
     return (
         seeds.crossJoin(F.broadcast(subspaces))
-        .select(
-            "s",
-            "cell",
-            F.slice(F.col("c_vec"), F.col("s") * sub + 1, F.lit(sub)).alias(
-                "cv"
-            ),
-        )
+        .select("s", "cell", _subspace(F.col("c_vec"), m).alias("cv"))
         .withColumn("cc", _dot(F.col("cv"), F.col("cv")))
     )
 
@@ -654,7 +713,6 @@ def pq_encode(
     embeddings: DataFrame,
     m: int = 4,
     k: int = 8,
-    dim: int = 64,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
@@ -680,25 +738,14 @@ def pq_encode(
     — three sequential-fold dots in a pinned tree, ties broken by code
     id, so codes and errors are bit-identical cross-engine.
     """
-    sub = dim // m
     emb = embeddings.select(id_col, vec_col)
-    cents = _pq_codebook(emb, m, k, sub, vec_col, id_col)
+    cents = _pq_codebook(emb, m, k, vec_col, id_col)
     scored = (
         # spread(): the corpus×(m·k) scored expansion runs in the scan
         # stage — one parquet split would serialize all its dots
         spread(emb).crossJoin(F.broadcast(cents))
-        .withColumn(
-            "xs",
-            F.slice(F.col(vec_col), F.col("s") * sub + 1, F.lit(sub)),
-        )
-        .withColumn(
-            "dist2",
-            (
-                _dot(F.col("xs"), F.col("xs"))
-                - F.lit(2.0) * _dot(F.col("xs"), F.col("cv"))
-            )
-            + F.col("cc"),
-        )
+        .withColumn("xs", _subspace(F.col(vec_col), m))
+        .withColumn("dist2", _sq_dist(F.col("xs")))
     )
     w = Window.partitionBy(id_col, "s").orderBy("dist2", "cell")
     best = scored.withColumn("rn", F.row_number().over(w)).filter(
@@ -723,13 +770,52 @@ def pq_encode(
     )
 
 
+def _adc_top_k(
+    cand: DataFrame, queries: DataFrame, book: DataFrame, m: int, k: int
+) -> DataFrame:
+    """Asymmetric-distance (ADC) top-k over PQ codes:
+    ``(q_id, n_id, adc_dist, rnk)``.  ``cand`` holds ``n_id`` and the
+    codes ``c0..c{m-1}``, plus ``q_id`` when each query has its own
+    candidates (IVF-PQ); without it every query scores every code.
+
+    Per query, distances to every entry of the codebook ``book`` form a
+    TABLE (n_queries·m·k rows — broadcast); a candidate's distance is
+    then m table LOOKUPS + adds, never touching the original vectors.
+    The per-candidate sum over subspaces is pivoted to FIXED columns and
+    added in textual order (no unordered float reduction), so distances
+    and ranks are bit-identical cross-engine.  Self-matches are
+    excluded; ties rank by neighbour id."""
+    keys = ["q_id"] if "q_id" in cand.columns else []
+    codes = [F.struct(F.lit(i).alias("s"), F.col(f"c{i}").alias("cell")) for i in range(m)]
+    melted = cand.select(*keys, "n_id", F.explode(F.array(*codes)).alias("p")).select(
+        *keys, "n_id", F.col("p.s").alias("s"), F.col("p.cell").alias("cell")
+    )
+    dtab = (
+        queries.crossJoin(F.broadcast(book))
+        .withColumn("qs", _subspace(F.col("q_vec"), m))
+        .select("q_id", "s", "cell", _sq_dist(F.col("qs")).alias("qd"))
+    )
+    joined = melted.join(F.broadcast(dtab), [*keys, "s", "cell"])
+    aggs = [
+        F.max(F.when(F.col("s") == i, F.col("qd"))).alias(f"_d{i}")
+        for i in range(m)
+    ]
+    per = joined.groupBy("q_id", "n_id").agg(*aggs)
+    adc = F.lit(0.0)
+    for i in range(m):
+        adc = adc + F.col(f"_d{i}")
+    scored = per.select("q_id", "n_id", adc.alias("adc_dist")).filter(
+        F.col("n_id") != F.col("q_id")
+    )
+    return _top_k(scored, k, F.col("adc_dist"))
+
+
 def pq_search(
     embeddings: DataFrame,
     n_queries: int = 3,
     top_k: int = 10,
     m: int = 4,
     k: int = 8,
-    dim: int = 64,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
@@ -739,72 +825,21 @@ def pq_search(
     n_queries``.
 
     The PQ payoff: per query, distances to every centroid of every
-    subspace form a ``m·k``-entry TABLE (here m·k·n_queries rows —
-    broadcast); each corpus vector's approximate distance is then m
-    table LOOKUPS + adds, never touching the original vectors.  At
+    subspace form a ``m·k``-entry table, and each corpus vector's
+    approximate distance is m lookups (:func:`_adc_top_k`).  At
     100 TB the scan reads the codes column (m bytes/vector) instead of
     the embedding (4·dim bytes) — a 64× narrower scan with ~1-2 lookup
     joins, which is exactly why IVF-PQ is the standard billion-vector
     layout.
-
-    The per-vector sum over subspaces is pivoted to FIXED columns and
-    added in textual order (no unordered float reduction), so distances
-    and ranks are bit-identical cross-engine.  Self-matches are
-    excluded; ties rank by neighbor id.
     """
-    sub = dim // m
-    codes = pq_encode(embeddings, m, k, dim, vec_col, id_col)
-    melted = codes.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("s"), F.col(f"c{i}").alias("cell")
-                    )
-                    for i in range(m)
-                ]
-            )
-        ).alias("p"),
-    ).select(id_col, F.col("p.s").alias("s"), F.col("p.cell").alias("cell"))
+    codes = pq_encode(embeddings, m, k, vec_col, id_col)
     emb = embeddings.select(id_col, vec_col)
-    cents = _pq_codebook(emb, m, k, sub, vec_col, id_col)
-    queries = emb.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("qv")
-    )
-    dtab = (
-        queries.crossJoin(F.broadcast(cents))
-        .withColumn(
-            "qs", F.slice(F.col("qv"), F.col("s") * sub + 1, F.lit(sub))
-        )
-        .select(
-            "q_id",
-            "s",
-            "cell",
-            (
-                (
-                    _dot(F.col("qs"), F.col("qs"))
-                    - F.lit(2.0) * _dot(F.col("qs"), F.col("cv"))
-                )
-                + F.col("cc")
-            ).alias("qd"),
-        )
-    )
-    joined = melted.join(F.broadcast(dtab), ["s", "cell"])
-    aggs = [
-        F.max(F.when(F.col("s") == i, F.col("qd"))).alias(f"_d{i}")
-        for i in range(m)
-    ]
-    per = joined.groupBy("q_id", id_col).agg(*aggs)
-    adc = F.lit(0.0)
-    for i in range(m):
-        adc = adc + F.col(f"_d{i}")
-    w = Window.partitionBy("q_id").orderBy("adc_dist", "n_id")
-    return (
-        per.select("q_id", F.col(id_col).alias("n_id"), adc.alias("adc_dist"))
-        .filter(F.col("n_id") != F.col("q_id"))
-        .withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= top_k)
+    return _adc_top_k(
+        codes.withColumnRenamed(id_col, "n_id"),
+        _queries(emb.filter(F.col(id_col) < n_queries), vec_col, id_col),
+        _pq_codebook(emb, m, k, vec_col, id_col),
+        m,
+        top_k,
     )
 
 
@@ -816,7 +851,6 @@ def ivf_pq_search(
     nprobe: int = 4,
     m: int = 4,
     k: int = 8,
-    dim: int = 64,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
@@ -827,10 +861,10 @@ def ivf_pq_search(
     CODES of those cells' members only — never the original vectors.
 
     Composition of the two audited halves: :func:`build_ivf_cells` /
-    the :func:`probe_ivf` probe device (coarse stage, cosine) and
-    :func:`pq_encode` / the :func:`pq_search` ADC device (fine stage,
-    L2) — same seeds, same codebooks, same tie-breaks, so the whole
-    pipeline stays bit-reproducible and oracle-checkable.
+    the ``_nearest_cells`` probe (coarse stage, cosine) and
+    :func:`pq_encode` / the ``_adc_top_k`` stage of :func:`pq_search`
+    (fine stage, L2) — same seeds, same codebooks, same tie-breaks, so
+    the whole pipeline stays bit-reproducible and oracle-checkable.
 
     Plan shape & the 100 TB story: codes (m bytes/vector) and cell
     assignments are ingest-time artifacts (``save_ivf_index`` layout:
@@ -845,27 +879,10 @@ def ivf_pq_search(
     the acceptance gate, and recall(ivf_pq) ≤ recall(pq_search) with
     nprobe → n_cells recovering pq_search exactly (pinned in pytest).
     """
-    sub = dim // m
     cents, assign = build_ivf_cells(embeddings, n_cells, vec_col, id_col)
-    codes = pq_encode(embeddings, m, k, dim, vec_col, id_col)
-    emb_n = with_norm(embeddings, vec_col)
-    queries = emb_n.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("qv"),
-        F.col("norm").alias("qn"),
-    )
-    # coarse stage: top-nprobe cells per query by centroid cosine (the
-    # probe_ivf device; n_queries x n_cells rows, single broadcast)
-    q_cells = queries.crossJoin(F.broadcast(cents)).withColumn(
-        "c_sim",
-        _dot(F.col("qv"), F.col("c_vec")) / (F.col("qn") * F.col("c_norm")),
-    )
-    wq = Window.partitionBy("q_id").orderBy(F.col("c_sim").desc(), "cell")
-    probes = (
-        q_cells.withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= nprobe)
-        .select("q_id", "qv", "cell")
-    )
+    codes = pq_encode(embeddings, m, k, vec_col, id_col)
+    queries = _queries(embeddings.filter(F.col(id_col) < n_queries), vec_col, id_col)
+    probes = _nearest_cells(queries, cents, nprobe).select("q_id", "probe")
     # fine stage candidates: PQ codes of the probed cells' members only
     cand = (
         assign.select(F.col(id_col).alias("n_id"), "cell")
@@ -875,60 +892,36 @@ def ivf_pq_search(
             ),
             "n_id",
         )
-        .join(F.broadcast(probes.select("q_id", "cell")), "cell")
+        .join(F.broadcast(probes), F.col("cell") == F.col("probe"))
     )
-    melted = cand.select(
-        "q_id",
-        "n_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("s"), F.col(f"c{i}").alias("cell")
-                    )
-                    for i in range(m)
-                ]
-            )
-        ).alias("p"),
-    ).select("q_id", "n_id", F.col("p.s").alias("s"), F.col("p.cell").alias("cell"))
-    # ADC distance table: query x subspace x code entry (n_queries·m·k
-    # rows — broadcast); candidate distances are m lookups + adds
-    pq_cents = _pq_codebook(
-        embeddings.select(id_col, vec_col), m, k, sub, vec_col, id_col
+    book = _pq_codebook(embeddings.select(id_col, vec_col), m, k, vec_col, id_col)
+    return _adc_top_k(cand, queries, book, m, top_k)
+
+
+def _recall_at_k(exact: DataFrame, approx: DataFrame, n_name: str = "n_approx") -> DataFrame:
+    """Per-query recall@k of the ``approx`` top-k against the ``exact``
+    one: ``(q_id, n_exact, <n_name>, n_hit, recall)`` with recall =
+    n_hit / n_exact as one exact-int IEEE division.  The join and
+    aggregates run on the two top-k result sets, never the corpus."""
+    exact = exact.select("q_id", "n_id")
+    approx = approx.select("q_id", "n_id")
+    n_exact = exact.groupBy("q_id").agg(F.count(F.lit(1)).alias("n_exact"))
+    n_approx = approx.groupBy("q_id").agg(F.count(F.lit(1)).alias(n_name))
+    n_hit = (
+        exact.join(approx, ["q_id", "n_id"], "left_semi")
+        .groupBy("q_id")
+        .agg(F.count(F.lit(1)).alias("n_hit"))
     )
-    dtab = (
-        queries.crossJoin(F.broadcast(pq_cents))
-        .withColumn(
-            "qs", F.slice(F.col("qv"), F.col("s") * sub + 1, F.lit(sub))
-        )
+    return (
+        n_exact.join(n_approx, "q_id", "left")
+        .join(n_hit, "q_id", "left")
         .select(
             "q_id",
-            "s",
-            "cell",
-            (
-                (
-                    _dot(F.col("qs"), F.col("qs"))
-                    - F.lit(2.0) * _dot(F.col("qs"), F.col("cv"))
-                )
-                + F.col("cc")
-            ).alias("qd"),
+            "n_exact",
+            F.coalesce(n_name, F.lit(0)).alias(n_name),
+            F.coalesce("n_hit", F.lit(0)).alias("n_hit"),
+            (F.coalesce("n_hit", F.lit(0)) / F.col("n_exact")).alias("recall"),
         )
-    )
-    joined = melted.join(F.broadcast(dtab), ["q_id", "s", "cell"])
-    aggs = [
-        F.max(F.when(F.col("s") == i, F.col("qd"))).alias(f"_d{i}")
-        for i in range(m)
-    ]
-    per = joined.groupBy("q_id", "n_id").agg(*aggs)
-    adc = F.lit(0.0)
-    for i in range(m):
-        adc = adc + F.col(f"_d{i}")
-    w = Window.partitionBy("q_id").orderBy("adc_dist", "n_id")
-    return (
-        per.select("q_id", "n_id", adc.alias("adc_dist"))
-        .filter(F.col("n_id") != F.col("q_id"))
-        .withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= top_k)
     )
 
 
@@ -947,29 +940,11 @@ def ivf_pq_recall(
     production serving shape.  Both sides deterministic, so the gate is
     reproducible and oracle-checkable.  Cost: the two top-k runs plus
     O(n_queries · k) bookkeeping."""
-    exact = knn_bruteforce(embeddings, n_queries, k, vec_col, id_col).select(
-        "q_id", "n_id"
-    )
-    approx = ivf_pq_search(
-        embeddings, n_queries, k, n_cells, nprobe, vec_col=vec_col, id_col=id_col
-    ).select("q_id", "n_id")
-    n_exact = exact.groupBy("q_id").agg(F.count(F.lit(1)).alias("n_exact"))
-    n_approx = approx.groupBy("q_id").agg(F.count(F.lit(1)).alias("n_approx"))
-    n_hit = (
-        exact.join(approx, ["q_id", "n_id"], "left_semi")
-        .groupBy("q_id")
-        .agg(F.count(F.lit(1)).alias("n_hit"))
-    )
-    return (
-        n_exact.join(n_approx, "q_id", "left")
-        .join(n_hit, "q_id", "left")
-        .select(
-            "q_id",
-            "n_exact",
-            F.coalesce("n_approx", F.lit(0)).alias("n_approx"),
-            F.coalesce("n_hit", F.lit(0)).alias("n_hit"),
-            (F.coalesce("n_hit", F.lit(0)) / F.col("n_exact")).alias("recall"),
-        )
+    return _recall_at_k(
+        knn_bruteforce(embeddings, n_queries, k, vec_col, id_col),
+        ivf_pq_search(
+            embeddings, n_queries, k, n_cells, nprobe, vec_col=vec_col, id_col=id_col
+        ),
     )
 
 
@@ -994,29 +969,9 @@ def ann_recall(
     Output: (q_id, n_exact, n_approx, n_hit, recall) with
     recall = n_hit / n_exact as one exact-int IEEE division.
     """
-    exact = knn_bruteforce(embeddings, n_queries, k, vec_col, id_col).select(
-        "q_id", "n_id"
-    )
-    approx = knn_lsh(embeddings, n_queries, k, n_planes, vec_col, id_col).select(
-        "q_id", "n_id"
-    )
-    n_exact = exact.groupBy("q_id").agg(F.count(F.lit(1)).alias("n_exact"))
-    n_approx = approx.groupBy("q_id").agg(F.count(F.lit(1)).alias("n_approx"))
-    n_hit = (
-        exact.join(approx, ["q_id", "n_id"], "left_semi")
-        .groupBy("q_id")
-        .agg(F.count(F.lit(1)).alias("n_hit"))
-    )
-    return (
-        n_exact.join(n_approx, "q_id", "left")
-        .join(n_hit, "q_id", "left")
-        .select(
-            "q_id",
-            "n_exact",
-            F.coalesce("n_approx", F.lit(0)).alias("n_approx"),
-            F.coalesce("n_hit", F.lit(0)).alias("n_hit"),
-            (F.coalesce("n_hit", F.lit(0)) / F.col("n_exact")).alias("recall"),
-        )
+    return _recall_at_k(
+        knn_bruteforce(embeddings, n_queries, k, vec_col, id_col),
+        knn_lsh(embeddings, n_queries, k, n_planes, vec_col, id_col),
     )
 
 
@@ -1036,38 +991,13 @@ def knn_lsh_multiprobe(
     misses, so recall rises toward brute force while the index stays a
     single bucket column.
 
-    Plan shape stays the equi-join: the query side EXPLODES into its
-    probe set (n_planes+1 rows per query — still config-sized, still
-    broadcast) instead of the corpus being compared against bucket
-    neighborhoods with a non-equi predicate.  Probe values are distinct
-    by construction (bucket ⊕ distinct one-bit masks), so no candidate
-    dedup is needed.  Exact re-scoring and the tie-broken rank are
-    identical to :func:`knn_lsh` — the result differs only by recall.
+    Same body as :func:`knn_lsh` with n_planes+1 probes per query
+    (bucket ⊕ each one-bit mask, plus the bucket itself): exact
+    re-scoring and the tie-broken rank are identical, so the result
+    differs only by recall.
     """
-    bucketed = add_lsh_bucket(with_norm(spread(embeddings), vec_col), n_planes, vec_col)
-    corpus = bucketed.select(
-        F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"),
-        F.col("norm").alias("n_norm"), F.col("bucket").alias("n_bucket"),
-    )
     masks = [0] + [1 << p for p in range(n_planes)]
-    probes = F.array(*[F.col("bucket").bitwiseXOR(F.lit(m)) for m in masks])
-    queries = bucketed.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"),
-        F.col("norm").alias("q_norm"), F.explode(probes).alias("probe"),
-    )
-    scored = (
-        corpus.join(
-            F.broadcast(queries),
-            (F.col("n_bucket") == F.col("probe")) & (F.col("n_id") != F.col("q_id")),
-        )
-        .withColumn("cosine", _dot(F.col("q_vec"), F.col("n_vec")) / (F.col("q_norm") * F.col("n_norm")))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("q_id", "n_id", "cosine", F.col("rnk").cast("bigint").alias("rnk"))
-    )
+    return _lsh_top_k(embeddings, n_queries, k, n_planes, vec_col, id_col, masks)
 
 
 def negative_pairs(
@@ -1202,32 +1132,13 @@ def mrl_recall(
     truncated run).  Output: ``(q_id, n_exact, n_trunc, n_hit,
     recall)``, recall one exact-int IEEE division.
     """
-    exact = knn_bruteforce(embeddings, n_queries, k, vec_col, id_col).select(
-        "q_id", "n_id"
-    )
     trunc_corpus = embeddings.withColumn(
         vec_col, F.slice(F.col(vec_col), 1, dims)
     )
-    trunc = knn_bruteforce(trunc_corpus, n_queries, k, vec_col, id_col).select(
-        "q_id", "n_id"
-    )
-    n_exact = exact.groupBy("q_id").agg(F.count(F.lit(1)).alias("n_exact"))
-    n_trunc = trunc.groupBy("q_id").agg(F.count(F.lit(1)).alias("n_trunc"))
-    n_hit = (
-        exact.join(trunc, ["q_id", "n_id"], "left_semi")
-        .groupBy("q_id")
-        .agg(F.count(F.lit(1)).alias("n_hit"))
-    )
-    return (
-        n_exact.join(n_trunc, "q_id", "left")
-        .join(n_hit, "q_id", "left")
-        .select(
-            "q_id",
-            "n_exact",
-            F.coalesce("n_trunc", F.lit(0)).alias("n_trunc"),
-            F.coalesce("n_hit", F.lit(0)).alias("n_hit"),
-            (F.coalesce("n_hit", F.lit(0)) / F.col("n_exact")).alias("recall"),
-        )
+    return _recall_at_k(
+        knn_bruteforce(embeddings, n_queries, k, vec_col, id_col),
+        knn_bruteforce(trunc_corpus, n_queries, k, vec_col, id_col),
+        "n_trunc",
     )
 
 

@@ -9,6 +9,8 @@ from pyspark.sql import functions as F
 from p2_mapreduce_spark.operators.similarity import (
     cosine_near_pairs,
     knn_bruteforce,
+    knn_bruteforce_np,
+    knn_exact,
     knn_ivf,
     knn_lsh,
 )
@@ -18,6 +20,109 @@ from p2_mapreduce_spark.session import load_table
 @pytest.fixture(scope="module")
 def emb(spark, sf_dir):
     return load_table(spark, sf_dir, "embeddings")
+
+
+def _jobs_per_call(spark, name, run):
+    """Spark jobs started while ``run()`` builds and collects, counted
+    from the status store through a job group of its own."""
+    sc = spark.sparkContext
+    group = f"jobs-per-call-{name}"
+    sc.setJobGroup(group, name)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_benchmarked_knn_jobs_per_call(spark, emb):
+    """The two kNN operators the benchmark times keep their job count
+    per collect: 4 for the exact scan and 5 for LSH on this fixture
+    (measured on the implementation that had one hand-written window per
+    operator)."""
+    bf = _jobs_per_call(spark, "knn_bruteforce", lambda: knn_bruteforce(emb, 5, 10).collect())
+    lsh = _jobs_per_call(spark, "knn_lsh", lambda: knn_lsh(emb, 5, 10).collect())
+    assert 0 < bf <= 4, bf
+    assert 0 < lsh <= 5, lsh
+
+
+def test_knn_exact_takes_any_query_frame(spark, emb):
+    """A query frame that is not an id prefix scores like the same
+    queries picked out of the prefix form."""
+    got = knn_exact(emb, emb.filter(F.col("vec_id").isin(3, 7)), k=5)
+    want = knn_bruteforce(emb, 8, 5).filter(F.col("q_id").isin(3, 7))
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_hybrid_search_dense_side_is_the_one_query(spark, sf_dir, emb):
+    """hybrid_search around a vector other than 0 fuses the same dense
+    list as scoring the whole id prefix and keeping that one query."""
+    from pyspark.sql import Window
+
+    from p2_mapreduce_spark.operators.search import bm25_search, hybrid_search, rrf_fuse
+
+    docs = load_table(spark, sf_dir, "documents")
+    terms = ["spark", "table", "window"]
+    got = hybrid_search(docs, emb, terms, query_vec_id=3)
+    sparse = bm25_search(docs, terms, top_n=50).select(
+        "doc_id", F.row_number().over(
+            Window.orderBy(F.col("score").desc(), F.col("doc_id"))
+        ).cast("bigint").alias("rnk")
+    )
+    dense = (
+        knn_bruteforce(emb, n_queries=4, k=50)
+        .filter(F.col("q_id") == 3)
+        .select(F.col("n_id").alias("doc_id"), F.col("rnk"))
+    )
+    want = rrf_fuse(sparse, dense)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_numpy_knn_empty_query_block(spark, emb):
+    """No query vectors: an empty ranked frame with the usual schema,
+    as knn_bruteforce returns, in both the raw and the quantized form."""
+    for quantize in (None, 1e6):
+        want = knn_bruteforce_np(emb, 2, 3, quantize=quantize).schema
+        for n_queries, corpus in ((0, emb), (5, emb.filter(F.col("vec_id") >= 5))):
+            got = knn_bruteforce_np(corpus, n_queries, 3, quantize=quantize)
+            assert got.schema == want
+            assert got.collect() == []
+    assert knn_bruteforce(emb, 0, 3).collect() == []
+
+
+def test_zero_norm_vector_ranks_last_instead_of_failing(spark):
+    """One all-zero vector, as query 0 and as a corpus member: its
+    cosines are NULL and rank after every real cosine, in the exact scan,
+    its numpy twin, IVF and LSH alike."""
+    rows = [(0, [0.0] * 4), (1, [1.0, -2.0, 0.5, 1.5]), (2, [-1.0, 2.0, -0.5, -1.5])]
+    rows += [(i, [float((i * 7 + d * 3) % 5) - 2.0 for d in range(4)]) for i in range(3, 12)]
+    z = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    exact = {(r.q_id, r.n_id): (r.cosine, r.rnk) for r in knn_bruteforce(z, 3, 20).collect()}
+    assert len(exact) == 3 * 11
+    for q in range(3):
+        ranked = sorted((rnk, n, c) for (q_, n), (c, rnk) in exact.items() if q_ == q)
+        nulls = [n for _, n, c in ranked if c is None]
+        assert [c is None for _, _, c in ranked] == sorted(c is None for _, _, c in ranked)
+        if q == 0:
+            assert nulls == list(range(1, 12))
+        else:
+            assert nulls == [0]
+    np_ = {(r.q_id, r.n_id): (r.cosine, r.rnk) for r in knn_bruteforce_np(z, 3, 20).collect()}
+    assert set(np_) == set(exact)
+    for key, (c, rnk) in np_.items():
+        assert rnk == exact[key][1]
+        assert (c is None) == (exact[key][0] is None)
+        assert c is None or abs(c - exact[key][0]) < 1e-9
+    # every cell probed: IVF sees every candidate, so it IS the exact scan
+    ivf = {(r.q_id, r.n_id): (r.cosine, r.rnk) for r in knn_ivf(z, 3, 20, n_cells=3, nprobe=3).collect()}
+    assert ivf == exact
+    # vectors 1 and 2 point opposite ways, so one shares bucket 0 with the
+    # zero vector under a single hyperplane
+    lsh = knn_lsh(z, 3, 20, n_planes=1).collect()
+    assert any(r.q_id == 0 for r in lsh) and any(r.n_id == 0 for r in lsh)
+    for r in lsh:
+        assert r.cosine == exact[(r.q_id, r.n_id)][0]
 
 
 def test_bruteforce_shape_and_rank(spark, emb):
@@ -188,6 +293,14 @@ class TestPqEncode:
             assert r["recon_err"] >= 0.0
         again = sorted(map(tuple, pq_encode(emb.repartition(7)).collect()))
         assert sorted(map(tuple, out)) == again
+        # subspace width follows the vector length: a 32-dim corpus built
+        # as [v, v] with m=4 repeats its codes, back half really encoded
+        half = F.slice("embedding", 1, 16)
+        doubled = emb.select("vec_id", F.concat(half, half).alias("embedding"))
+        rows = pq_encode(doubled, m=4).collect()
+        assert len(rows) == len(out)
+        assert all(r.c0 == r.c2 and r.c1 == r.c3 for r in rows)
+        assert len({r.c2 for r in rows}) > 1
 
     def test_seed_vectors_encode_themselves(self, spark, sf_dir):
         """A codebook seed's subvectors ARE centroids: its recon error
